@@ -14,22 +14,26 @@ main.py:201-235):
   31-35).
 
 Fingerprints are directory-manifest digests (sorted "path sha1" lines,
-main.py:66-68) computed *distributed* via the manifest scan + digest
-operators — the driver only ever holds the 40-char digest.
+main.py:66-68) computed on the driver, as the reference's
+scripts/checksum.py:19-32 does: each file is streamed through SHA-1 in
+fixed-size chunks, so memory stays bounded whatever the file size, and
+no file is held as one row (Spark's ``binaryFile`` source does that, and
+refuses files over 2 GiB). No Spark job runs. The file filter and the
+digest match the distributed route ``manifest_digest(
+manifest_with_checksums(...))`` byte for byte, so done-signals written
+by either route stay valid.
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from pmc_conversion_spark.operators.aggregates import manifest_digest
-from pmc_conversion_spark.sources.scans import manifest_with_checksums
 
 #: luigi's recommended exit-code classes (luigi.cfg-sample:46-54)
 RETCODES = {
@@ -63,12 +67,10 @@ class PipelineExit(RuntimeError):
             f"{cause}")
 
 
-def _classify(exc: BaseException) -> str:
+def _classify(exc: Exception) -> str:
     if isinstance(exc, (MissingDataError, FileNotFoundError)):
         return "missing_data"
-    if isinstance(exc, Exception):
-        return "task_failed"
-    return "unhandled_exception"
+    return "task_failed"
 
 
 class ResourcePool:
@@ -104,16 +106,46 @@ class ResourcePool:
             self._cv.notify_all()
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (HadoopFSUtils'
+    ``shouldFilterOutPathName``), before its ``_metadata`` exception."""
+    return (name.startswith(".") or name.endswith("._COPYING_")
+            or (name.startswith("_") and "=" not in name))
+
+
+def dir_manifest(path: str) -> list[tuple[str, str]]:
+    """(relative path, SHA-1 hex) of every file a Spark manifest scan
+    (``manifest_with_checksums``) of ``path`` would list, sorted by path.
+
+    Same file filter: hidden and ``._COPYING_`` names are skipped at
+    every level, except directories named ``_metadata*`` /
+    ``_common_metadata*`` (Spark lists those, then drops such *files*);
+    zero-length files and ``.sha1`` sidecars are skipped; symlinked
+    directories are followed. A missing directory has no files."""
+    out = []
+    for dirpath, dirnames, filenames in os.walk(path, followlinks=True):
+        dirnames[:] = [d for d in dirnames if not _hidden(d)
+                       or d.startswith(("_metadata", "_common_metadata"))]
+        for name in filenames:
+            full = os.path.join(dirpath, name)
+            if (_hidden(name) or name.endswith(".sha1")
+                    or os.path.getsize(full) == 0):
+                continue
+            with open(full, "rb") as f:
+                sha1 = hashlib.file_digest(f, "sha1").hexdigest()
+            out.append((os.path.relpath(full, path), sha1))
+    return sorted(out)
+
+
 def dir_fingerprint(spark: SparkSession, path: str) -> str:
-    """SHA-1 of the sorted manifest digest of a directory (empty dir or
-    missing dir -> fingerprint of the empty string)."""
-    if not os.path.isdir(path) or not any(
-            not f.startswith(".") for _, _, fs in os.walk(path) for f in fs):
-        import hashlib
-        return hashlib.sha1(b"").hexdigest()
-    digest_df = manifest_digest(manifest_with_checksums(spark, path))
-    return digest_df.select(
-        F.sha1(F.encode("digest", "UTF-8")).alias("d")).collect()[0]["d"]
+    """SHA-1 of a directory's manifest digest: its ``"<path> <sha1>"``
+    lines sorted in UTF-8 byte order and joined by newlines, as
+    ``manifest_digest`` builds it (an empty or missing directory gives
+    the SHA-1 of the empty string). Runs on the driver; ``spark`` is
+    unused and kept for the callers' signature."""
+    lines = sorted(f"{rel} {sha1}".encode() for rel, sha1 in
+                   dir_manifest(path))
+    return hashlib.sha1(b"\n".join(lines)).hexdigest()
 
 
 @dataclass
@@ -153,8 +185,18 @@ class SignalStore:
             return f.read().strip()
 
     def write(self, task: str, signal: str) -> None:
-        with open(self._path(task), "w") as f:
-            f.write(signal)
+        """Atomic: a reader sees the old signal or the new one, never a
+        partly written file."""
+        path = self._path(task)
+        tmp = path + ".tmp"
+        try:
+            with open(tmp, "w") as f:
+                f.write(signal)
+            os.replace(tmp, path)
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
 
     def remove(self, task: str | None = None) -> None:
         """Force re-run: drop one signal or all (remove_done_files.sh:3)."""
@@ -220,13 +262,15 @@ class DagRunner:
 
     def _attempt(self, task: Task) -> None:
         """Run with the task's retry budget; classify the final
-        failure into a retcode class (luigi.cfg-sample:46-54)."""
-        last: BaseException | None = None
+        failure into a retcode class (luigi.cfg-sample:46-54).
+        ``KeyboardInterrupt`` and ``SystemExit`` are neither retried nor
+        wrapped."""
+        last: Exception | None = None
         for _ in range(task.retries + 1):
             try:
                 task.run()
                 return
-            except BaseException as e:
+            except Exception as e:
                 last = e
         assert last is not None
         raise PipelineExit(_classify(last), task.name, last) from last
@@ -248,10 +292,11 @@ class DagRunner:
         lock = threading.Lock()
 
         def exec_task(task: Task) -> None:
-            sig = self.input_signal(task)
             dep_ran = any(r.name in upstream_ran
                           for r in task.required_tasks)
-            if not dep_ran and self.signals.read(task.name) == sig:
+            # an upstream re-run forces this one: no need to fingerprint
+            if not dep_ran and (self.signals.read(task.name)
+                                == self.input_signal(task)):
                 with lock:
                     statuses.append((task.name, "skipped"))
                 return
@@ -290,6 +335,8 @@ class DagRunner:
                     if exc is None:
                         completed.add(t.name)
                         continue
+                    if not isinstance(exc, Exception):
+                        raise exc  # KeyboardInterrupt, SystemExit
                     with lock:
                         statuses.append((t.name, "failed"))
                     if failure is None:

@@ -9,7 +9,9 @@ the ``transmart_loader=1`` resource cap on the load stage
 exit (scripts/run.sh:8-10).
 
 This module assembles the same chain from the engine's pieces:
-distributed manifest fingerprints drive the skip logic (DagRunner),
+manifest fingerprints hashed on the driver drive the skip logic
+(DagRunner; files are streamed in chunks as scripts/checksum.py does, so
+memory stays bounded and Spark's 2 GiB binaryFile limit does not apply),
 sources2csr + csr2transmart are the real Spark compilers, git commits
 become SnapshotStore commits, the DB load is the atomic staging-swap
 sink (no Postgres in the sandbox — same all-or-nothing contract,
@@ -25,13 +27,21 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from pmc_conversion_spark.plans import reference_e2e as RE
 from pmc_conversion_spark.plans import transmart as TM
 from pmc_conversion_spark.plans.incremental import (DagRunner, SignalStore,
-                                                    Task)
+                                                    Task, dir_manifest)
 from pmc_conversion_spark.plans.ontology import ontology_df
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter riding on whichever job consumes it:
+    ``obs.get["rows"]`` after that job, no second execution."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 @dataclass
@@ -72,23 +82,22 @@ def build_reference_dag(spark: SparkSession, *, root: str,
 
     def git_commit_input() -> None:
         failpoint("git_commit_input")
-        from pmc_conversion_spark.sources.scans import \
-            manifest_with_checksums
+        from pmc_conversion_spark.util import local_df
         store = SnapshotStore(os.path.join(root, "snap_input"))
-        m = manifest_with_checksums(spark, input_data)
-        ctx.counts["input_files"] = store.commit(
-            m.select("path", "sha1"))["n_rows"]
+        m = local_df(spark, dir_manifest(input_data),
+                     "path string, sha1 string")
+        ctx.counts["input_files"] = store.commit(m)["n_rows"]
 
     def sources2csr() -> None:
         failpoint("sources2csr")
         from pmc_conversion_spark.sources.sinks import write_tsv
-        from pyspark.sql import functions as F
         csr = RE.build_csr(spark, data_dir=input_data)
+        csr["Individual"], individuals = _counted(csr["Individual"])
         for name, df in csr.items():
             write_tsv(df.select([F.col(c).cast("string")
                                  for c in df.columns]),
                       os.path.join(working, name), single_file=True)
-        ctx.counts["individual_rows"] = csr["Individual"].count()
+        ctx.counts["individual_rows"] = individuals.get["rows"]
 
     def csr2transmart() -> None:
         failpoint("csr2transmart")
@@ -99,8 +108,10 @@ def build_reference_dag(spark: SparkSession, *, root: str,
         ont = ontology_df(spark, RE.load_ontology_nodes(), top_node)
         tabs = TM.build_staging(spark, csr, ont, study_id,
                                 top_node + "\\")
+        tabs["observation_fact"], observations = _counted(
+            tabs["observation_fact"])
         TM.write_staging(tabs, staging)
-        ctx.counts["observation_rows"] = tabs["observation_fact"].count()
+        ctx.counts["observation_rows"] = observations.get["rows"]
 
     def git_commit_staging() -> None:
         failpoint("git_commit_staging")

@@ -243,7 +243,7 @@ def pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Done-signal protocol end-to-end (luigi_commons.py:17-28,69-80):
     run 1 executes both stages; run 2 (nothing changed) skips both;
     run 3 (input file changed) re-runs the chain. Fingerprints are
-    distributed manifest digests over real directories."""
+    manifest digests over real directories, hashed on the driver."""
     from pmc_conversion_spark.plans.incremental import (
         DagRunner, SignalStore, Task)
     from pmc_conversion_spark.sources.scans import scan_csv_delim
