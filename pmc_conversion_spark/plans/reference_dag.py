@@ -127,11 +127,10 @@ def build_reference_dag(spark: SparkSession, *, root: str,
         # live location (README.md:181-183); Postgres is out of scope
         # in the sandbox, the atomicity contract is not
         from pmc_conversion_spark.sources.scans import scan_csv_delim
-        obs = scan_csv_delim(spark, os.path.join(
-            staging, "i2b2demodata", "observation_fact.tsv"))
+        obs, loaded = _counted(scan_csv_delim(spark, os.path.join(
+            staging, "i2b2demodata", "observation_fact.tsv")))
         tx_swap_write(obs, live_db)
-        ctx.counts["loaded_obs"] = scan_csv_delim(
-            spark, live_db).count()
+        ctx.counts["loaded_obs"] = loaded.get["rows"]
 
     def transmart_api() -> None:
         failpoint("transmart_api")

@@ -16,13 +16,17 @@ parsed at plan time), exactly as in the reference.
 
 from __future__ import annotations
 
+import csv
 import json
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from pmc_conversion_spark.plans import config_model as CM
-from pmc_conversion_spark.plans.sources2csr import build_all
+from pmc_conversion_spark.plans.sources2csr import CodebookRows, build_all
+from pmc_conversion_spark.sources.codebook import parse_codebook_file
 
 #: reference e2e dataset locations (read-only)
 REF_E2E = "/root/reference/test_data_e2e/current"
@@ -54,53 +58,51 @@ def referenced_files(config: CM.SourcesConfig) -> list[str]:
     return files
 
 
+def csv_header(path: str, delimiter: str) -> list[str]:
+    """The column names Spark's ``header=True`` CSV read gives ``path``,
+    read on the driver from the file's first record.
+
+    Spark's naming rule: an empty name becomes ``_c<i>``; names that
+    collide case-insensitively become ``<name><i>`` (``i`` = column
+    index); a UTF-8 BOM is stripped.
+    """
+    with open(path, newline="", encoding="utf-8-sig") as f:
+        row = next(csv.reader(f, delimiter=delimiter, quotechar='"'), [])
+    seen = Counter(name.lower() for name in row)
+    return [f"_c{i}" if not name
+            else f"{name}{i}" if seen[name.lower()] > 1
+            else name
+            for i, name in enumerate(row)]
+
+
 def load_frames(spark: SparkSession, data_dir: str,
                 config: CM.SourcesConfig
-                ) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
-    """Read every referenced source file and every bound codebook.
+                ) -> tuple[dict[str, DataFrame], dict[str, CodebookRows]]:
+    """Read every referenced source file and parse every bound codebook.
 
     Sources read as all-string CSV with the per-file delimiter
     (file_format map; TAB default) — schema-on-config: typing happens in
-    the compiler per declared attribute, never by inference. Codebooks
-    parse driver-side (sources/codebook.py) into broadcastable mapping
-    frames keyed by their config path.
+    the compiler per declared attribute, never by inference. Each
+    file's header is read on the driver (:func:`csv_header`) and passed
+    as the schema, so loading runs no Spark job. Codebooks parse
+    driver-side (sources/codebook.py) into ``(column, code, label)``
+    rows keyed by their config path.
     """
-    # Each header=True csv() runs a tiny header-probe job; submit them
-    # concurrently (they are independent scans) so 10 source files cost
-    # ~1 probe of wall-clock, not 10 serialized ones.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def read_csv(f: str) -> DataFrame:
-        fmt = config.fmt(f)
-        return (spark.read
-                .option("sep", fmt.delimiter)
-                .option("header", True)
-                .option("quote", '"')
-                .option("inferSchema", False)
-                .csv(os.path.join(data_dir, f)))
-
-    ref_files = referenced_files(config)
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        frames = dict(zip(ref_files, ex.map(read_csv, ref_files)))
-    codebooks: dict[str, DataFrame] = {}
-    cb_columns: dict[str, list[str]] = {}
+    frames: dict[str, DataFrame] = {}
+    codebooks: dict[str, CodebookRows] = {}
     for f in referenced_files(config):
-        cb = config.fmt(f).codebook
-        if not cb:
-            continue
-        if cb not in codebooks:
-            from pmc_conversion_spark.sources.codebook import \
-                parse_codebook_file
-            rows = parse_codebook_file(os.path.join(data_dir, cb))
-            cb_columns[cb] = sorted({r[0] for r in rows})
-            from pmc_conversion_spark.util import local_df
-            codebooks[cb] = local_df(
-                spark, rows, "column string, code string, label string")
-        # The codebook parse is driver-side already — record each
-        # file's decodable columns in the config so the compiler never
-        # runs a distinct() Spark job just to learn them (was ~0.2 s
-        # of job overhead per codebook-bearing source, every build).
-        config.codebook_columns.setdefault(f, cb_columns[cb])
+        fmt = config.fmt(f)
+        path = os.path.join(data_dir, f)
+        schema = T.StructType([T.StructField(c, T.StringType())
+                               for c in csv_header(path, fmt.delimiter)])
+        frames[f] = (spark.read.schema(schema)
+                     .option("sep", fmt.delimiter)
+                     .option("header", True)
+                     .option("quote", '"')
+                     .csv(path))
+        if fmt.codebook and fmt.codebook not in codebooks:
+            codebooks[fmt.codebook] = parse_codebook_file(
+                os.path.join(data_dir, fmt.codebook))
     return frames, codebooks
 
 

@@ -10,12 +10,17 @@ push filters/pruning into every source scan.
 
 from __future__ import annotations
 
+from collections.abc import Collection
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pmc_conversion_spark.functions import dates as D
-from pmc_conversion_spark.operators.joins import codebook_decode
 from pmc_conversion_spark.plans.config_model import EntityConfig, SourcesConfig
+from pmc_conversion_spark.sources.codebook import codebook_maps
+
+#: a codebook as parsed on the driver: (column, code, label) rows
+CodebookRows = list[tuple[str, str, str]]
 
 
 class DuplicateIdError(ValueError):
@@ -35,13 +40,19 @@ def _typed(col: Column, kind: str, date_format: str | None) -> Column:
 
 
 def project_source(df: DataFrame, entity: EntityConfig, file: str,
-                   codebook: DataFrame | None = None,
+                   codebook: CodebookRows | None = None,
                    codebook_columns: list[str] | None = None) -> DataFrame:
     """Project one source file down to (id, contributed attributes).
 
     Column selection is by declared header name; a missing declared
     column fails the run (schema-on-config, SURVEY §1.1). Codebook decode
-    runs on the raw source columns before type casting.
+    runs on the raw source columns before type casting:
+    ``coalesce(map[raw], raw)`` with ``raw`` the value as a string, so
+    NULL and unmapped values keep the raw value (codebooks are
+    partial). Without ``codebook_columns`` every column the codebook
+    names is decoded (real-format configs carry no column list; the
+    group lines name them, e.g. individual_codebook.tsv group 8:
+    HOSPREC HOSPDIAG ...).
     """
     contributed: list[tuple[str, str, str | None]] = []  # (attr, col, fmt)
     for a in entity.attributes:
@@ -54,22 +65,19 @@ def project_source(df: DataFrame, entity: EntityConfig, file: str,
     if missing:
         raise ValueError(
             f"{file}: declared columns missing from header: {missing}")
+    maps: dict[str, Column] = {}
+    coded: Collection[str] = ()
     if codebook is not None:
-        if codebook_columns is None:
-            # real-format configs carry no column list — the codebook
-            # itself names its columns (group lines, e.g.
-            # individual_codebook.tsv group 8: HOSPREC HOSPDIAG ...).
-            # Driver-side distinct on a config-plane dimension frame —
-            # bounded at any scale.
-            codebook_columns = [r["column"] for r in
-                                codebook.select("column").distinct().collect()]
-        decode_cols = [c for c in codebook_columns if c in df.columns]
-        if decode_cols:
-            df = codebook_decode(df, codebook, decode_cols)
+        maps = codebook_maps(codebook)
+        coded = maps if codebook_columns is None else codebook_columns
     cols = []
     for attr, col, fmt in contributed:
+        src = F.col(col)
+        if col in coded:
+            raw = src.cast("string")
+            src = F.coalesce(maps[col][raw], raw) if col in maps else raw
         kind = entity.attr(attr).kind
-        cols.append(_typed(F.col(col), kind, fmt).alias(attr))
+        cols.append(_typed(src, kind, fmt).alias(attr))
     return df.select(*cols)
 
 
@@ -109,7 +117,7 @@ def run_dup_checks(checks: list[DataFrame]) -> None:
 
 def build_entity(frames: dict[str, DataFrame], entity: EntityConfig,
                  config: SourcesConfig,
-                 codebooks: dict[str, DataFrame] | None = None,
+                 codebooks: dict[str, CodebookRows] | None = None,
                  validate_ids: bool = True,
                  dup_checks: list[DataFrame] | None = None) -> DataFrame:
     """Compile the full priority merge for one entity.
@@ -180,7 +188,7 @@ def build_entity(frames: dict[str, DataFrame], entity: EntityConfig,
 
 
 def build_all(frames: dict[str, DataFrame], config: SourcesConfig,
-              codebooks: dict[str, DataFrame] | None = None
+              codebooks: dict[str, CodebookRows] | None = None
               ) -> dict[str, DataFrame]:
     """All entity tables (the CSR) from one set of source frames.
 

@@ -25,6 +25,13 @@ the fact side never shuffles on anything but the join key. Surrogate
 (:func:`~pmc_conversion_spark.operators.windows.surrogate_key_distributed`)
 so no stage sorts the whole patient table in one partition.
 
+The patient dimension is computed once per :func:`build_staging`: the
+frame is persisted, and ``patient_dimension``, ``patient_mapping`` and
+``observation_fact`` all read it; :func:`write_staging` releases it.
+A lost cached block is recomputed safely, since the bucket ids are a
+pure function of the key (no ``localCheckpoint``: see
+``operators/windows.py``).
+
 i2b2 value-type conventions used (public i2b2 CDM): ``valtype_cd`` is
 ``N`` for numeric observations (``tval_char = 'E'`` meaning *equals*,
 value in ``nval_num``), ``D`` for dates (ISO string in ``tval_char``),
@@ -208,9 +215,11 @@ def build_staging(spark: SparkSession, csr: Mapping[str, DataFrame],
                   ontology: DataFrame, study_id: str,
                   top_node: str) -> dict[str, DataFrame]:
     """Assemble every staging table (keys = :data:`STAGING_LAYOUT`
-    values)."""
+    values). The ``patient_dimension`` frame is persisted, so the three
+    tables built on it share one computation; :func:`write_staging`
+    unpersists it, a caller that does not write must do so itself."""
     study = study_frame(spark, study_id)
-    pats = patient_dimension(csr["Individual"])
+    pats = patient_dimension(csr["Individual"]).persist()
     obs = csr_observations(csr)
     return {
         "study": study,
@@ -225,9 +234,14 @@ def build_staging(spark: SparkSession, csr: Mapping[str, DataFrame],
 
 def write_staging(tables: Mapping[str, DataFrame], out_dir: str) -> None:
     """Write the transmart-copy staging directory (the stage-4 input
-    contract, main.py:144-147: ``--directory <transmart_staging_dir>``)."""
+    contract, main.py:144-147: ``--directory <transmart_staging_dir>``),
+    then release the patient dimension :func:`build_staging` persisted."""
     from pmc_conversion_spark.sources.sinks import write_tsv
-    for rel, key in STAGING_LAYOUT.items():
-        df = tables[key]
-        write_tsv(df.select([F.col(c).cast("string") for c in df.columns]),
-                  os.path.join(out_dir, rel), single_file=True)
+    try:
+        for rel, key in STAGING_LAYOUT.items():
+            df = tables[key]
+            write_tsv(df.select([F.col(c).cast("string")
+                                 for c in df.columns]),
+                      os.path.join(out_dir, rel), single_file=True)
+    finally:
+        tables["patient_dimension"].unpersist()

@@ -90,9 +90,8 @@ def _csr_individual(spark: SparkSession) -> DataFrame:
             spark, INDIVIDUAL_CSV_ROWS,
             "INDIVIDUAL_ID string, SEX string, DTOB string"),
     }
-    codebooks = {"codebook": fixture_df(
-        spark, CODEBOOK_ROWS, "column string, code string, label string")}
-    return build_entity(frames, INDIVIDUAL_ENTITY, SOURCES_CONFIG, codebooks)
+    return build_entity(frames, INDIVIDUAL_ENTITY, SOURCES_CONFIG,
+                        {"codebook": CODEBOOK_ROWS})
 
 
 @register(

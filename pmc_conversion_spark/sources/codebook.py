@@ -16,16 +16,19 @@ line plus one or more mapping lines, with ``\\r``-only line terminators
   may span several mapping lines (group 8 lists 12 hospitals over 2).
 
 The parse is driver-side (codebooks are config-plane dimension data —
-bounded at any scale) and the result is a broadcastable
-``(column, code, label)`` DataFrame, exactly the frame
-``operators.joins.codebook_decode`` consumes.
+bounded at any scale) and yields ``(column, code, label)`` rows. The
+sources2csr compiler decodes with them through :func:`codebook_maps`,
+one map literal per column inside the source's own projection, so a
+decode adds no join and no job; :func:`codebook_df` turns them into the
+mapping frame ``operators.joins.codebook_decode`` consumes.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _unquote(field: str) -> str:
@@ -79,8 +82,27 @@ def parse_codebook_file(path: str) -> list[tuple[str, str, str]]:
         return parse_codebook_text(f.read())
 
 
+def codebook_maps(rows: list[tuple[str, str, str]]) -> dict[str, Column]:
+    """One ``code -> label`` map literal per column of the
+    ``(column, code, label)`` rows; ``map[raw]`` is the label or NULL.
+
+    A (column, code) pair listed twice with the same label collapses;
+    one listed with two different labels raises ``ValueError`` naming
+    it (as a join it would duplicate every matching source row).
+    """
+    labels: dict[str, dict[str, str]] = {}
+    for column, code, label in rows:
+        seen = labels.setdefault(column, {}).setdefault(code, label)
+        if seen != label:
+            raise ValueError(
+                f"codebook maps {column} code {code!r} to both {seen!r} "
+                f"and {label!r}")
+    return {c: F.map_from_arrays(F.lit(list(m)), F.lit(list(m.values())))
+            for c, m in labels.items()}
+
+
 def codebook_df(spark: SparkSession, path: str) -> DataFrame:
-    """Read + parse a real codebook file into the broadcastable
+    """Read + parse a real codebook file into the
     ``(column, code, label)`` mapping frame."""
     from pmc_conversion_spark.util import local_df
     rows = parse_codebook_file(path)

@@ -10,10 +10,11 @@ write-to-staging + atomic swap here.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -110,21 +111,38 @@ def jdbc_tx_load(df: DataFrame, url: str, table: str,
         conn.close()
 
 
+def _row_hash(df: DataFrame) -> Column:
+    """Per-row 60-bit hash: the row's string fields (null as empty)
+    joined by ``\\x1f``, sha1'd, first 15 hex digits as a bigint."""
+    cols = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns]
+    line = F.concat_ws("\x1f", *cols)
+    return (F.conv(F.substring(F.sha1(F.encode(line, "UTF-8")), 1, 15), 16, 10)
+            .cast("bigint"))
+
+
+def _digest_aggs(h: Column) -> list[Column]:
+    """The three commutative combines of the row hashes: sum mod 2^60
+    over decimal, bit_xor, count."""
+    return [(F.sum(h.cast("decimal(38,0)")) % F.lit(1 << 60)).alias("s"),
+            F.bit_xor(h).alias("x"),
+            F.count(F.lit(1)).alias("n")]
+
+
+def _digest_of(row) -> tuple[str, int]:
+    """The digest string and row count from one (s, x, n) combine."""
+    s = int(row["s"]) if row["s"] is not None else 0
+    x = int(row["x"]) if row["x"] is not None else 0
+    n = int(row["n"])
+    return hashlib.sha1(f"{s}|{x}|{n}".encode()).hexdigest(), n
+
+
 def snapshot_digest_plan(df: DataFrame) -> DataFrame:
     """The 1-row digest aggregation plan (exposed for plan-quality
     tests): map (concat row -> sha1 -> 60-bit int) then ONE all-partial
     aggregation of three commutative combines (sum mod 2^60 over
     decimal, bit_xor, count). No sort, no collect_list, no single-task
     reduction."""
-    cols = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns]
-    line = F.concat_ws("\x1f", *cols)
-    h = (F.conv(F.substring(F.sha1(F.encode(line, "UTF-8")), 1, 15), 16, 10)
-         .cast("bigint"))
-    return (df.select(h.alias("h"))
-            .agg((F.sum(F.col("h").cast("decimal(38,0)"))
-                  % F.lit(1 << 60)).alias("s"),
-                 F.expr("bit_xor(h)").alias("x"),
-                 F.count(F.lit(1)).alias("n")))
+    return df.select(_row_hash(df).alias("h")).agg(*_digest_aggs(F.col("h")))
 
 
 def snapshot_digest(df: DataFrame) -> tuple[str, int]:
@@ -133,16 +151,10 @@ def snapshot_digest(df: DataFrame) -> tuple[str, int]:
     The only driver transfer is the final 1-row combine triple, which
     is sha1'd into the digest string. Collision posture: 60-bit sum +
     60-bit xor + count; an adversarial collision is ~2^-60, fine for
-    change detection.
+    change detection. :meth:`SnapshotStore.commit` computes the same
+    digest on its write job.
     """
-    import hashlib
-
-    row = snapshot_digest_plan(df).collect()[0]
-    s = int(row["s"]) if row["s"] is not None else 0
-    x = int(row["x"]) if row["x"] is not None else 0
-    n = int(row["n"])
-    digest = hashlib.sha1(f"{s}|{x}|{n}".encode()).hexdigest()
-    return digest, n
+    return _digest_of(snapshot_digest_plan(df).collect()[0])
 
 
 class SnapshotStore:
@@ -187,23 +199,36 @@ class SnapshotStore:
         (main.py:66-68 semantics applied to content instead of files):
         each row line is sha1-hashed, the per-row 60-bit hash prefixes
         are combined with commutative aggregates (modular sum, bit_xor,
-        count — all map-side partial, so no executor ever holds more
-        than three longs), and the combined triple is sha1'd into the
-        digest string. Same observable semantics as sorting and hashing
-        every line, but fully distributed — the previous collect_list
-        form funneled the whole table through one task (VERDICT r1).
+        count — all map-side partial), and the combined triple is
+        sha1'd into the digest string — the same digest as
+        :func:`snapshot_digest`.
+
+        The aggregates ride on the snapshot write as an ``Observation``,
+        so a commit is one Spark job. The write goes to a hidden
+        ``.v<N>.tmp`` dir; a clean commit deletes it, a dirty one
+        renames it to ``v<N>`` and then appends the MANIFEST line, so a
+        ``v<N>`` dir only ever appears complete.
         """
-        digest, n_rows = snapshot_digest(df)
-        head = self.head_digest()
         vs = self.versions()
-        if head == digest:
-            return vs[-1]  # clean: skip commit
         # max+1, not last+1: after a rollback the head entry points at
         # an OLD version number, but new snapshots must never reuse a
         # version dir that already exists
         version = (max(v["version"] for v in vs) + 1) if vs else 1
-        write_tsv(df, os.path.join(self.root, f"v{version}"), sep=sep,
-                  single_file=True)
+        tmp = os.path.join(self.root, f".v{version}.tmp")
+        final = os.path.join(self.root, f"v{version}")
+        obs = Observation()
+        try:
+            write_tsv(df.observe(obs, *_digest_aggs(_row_hash(df))), tmp,
+                      sep=sep, single_file=True)
+            digest, n_rows = _digest_of(obs.get)
+            if vs and vs[-1]["digest"] == digest:
+                return vs[-1]  # clean: skip commit
+            # a v<N> outside MANIFEST is the orphan of a commit that
+            # died between the rename and the log append
+            shutil.rmtree(final, ignore_errors=True)
+            os.rename(tmp, final)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         with open(self._log_path, "a") as f:
             f.write(f"{version}\t{digest}\t{n_rows}\n")
         return {"version": version, "digest": digest, "n_rows": n_rows}
