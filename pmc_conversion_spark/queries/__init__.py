@@ -43,8 +43,8 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             raise ValueError(f"duplicate query registration: {name}")
 
         def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from pmc_conversion_spark.util import tune_local_session
-            tune_local_session(spark)
+            from pmc_conversion_spark.session import apply_engine_conf
+            apply_engine_conf(spark)
             return fn(spark, sf_dir)
 
         tuned.__name__ = fn.__name__

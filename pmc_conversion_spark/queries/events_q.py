@@ -221,12 +221,11 @@ def stream_custom_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Derive the stream schema from a RAW batch read of the same file
     # (NOT tables.load, which already rebuilds nanos-long ts into a
     # timestamp — declaring that rebuilt schema on the stream would
-    # mismatch the long the parquet source actually yields under
-    # nanosAsLong and fail the read; ADVICE r2). On micros-NTZ data the
-    # raw schema is already a timestamp and the rebuild is a no-op
-    # branch; on legacy nanos data ts arrives long and is rebuilt on
-    # the STREAM, mirroring tables._load_events.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # mismatch the long the parquet source actually yields under the
+    # engine's legacy nanos conf and fail the read; ADVICE r2). On
+    # micros-NTZ data the raw schema is already a timestamp and the
+    # rebuild is a no-op branch; on legacy nanos data ts arrives long
+    # and is rebuilt on the STREAM, mirroring tables._load_events.
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream = (spark.readStream.schema(raw.schema)
               .option("pathGlobFilter", "events.parquet")  # dir source
@@ -281,7 +280,6 @@ if _protobuf_available():
         from pmc_conversion_spark.streaming.stateful import \
             running_count_tws
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = (spark.readStream.schema(raw.schema)
                   .option("pathGlobFilter", "events.parquet")
@@ -310,7 +308,6 @@ if _protobuf_available():
 
         from pyspark.sql import types as T
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = (spark.readStream.schema(raw.schema)
                   .option("pathGlobFilter", "events.parquet")
@@ -422,7 +419,6 @@ if _protobuf_available():
         from pmc_conversion_spark.streaming.stateful import \
             flush_on_watermark_tws
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = (spark.readStream.schema(raw.schema)
                   .option("pathGlobFilter", "events.parquet")
@@ -1935,7 +1931,6 @@ def stream_dedup_within_watermark(spark: SparkSession,
 
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream = (spark.readStream.schema(raw.schema)
               .option("pathGlobFilter", "events.parquet")
@@ -2256,7 +2251,6 @@ def stream_union_two_sources(spark: SparkSession,
 
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     def feed(types, label):
@@ -5348,7 +5342,6 @@ def _register_tws_initial_state() -> None:
         from pmc_conversion_spark.streaming.stateful import \
             warm_start_count_tws
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
         seed = (raw.filter(F.col("event_id") % 2 == 0)
                 .groupBy("user_id")

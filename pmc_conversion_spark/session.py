@@ -1,9 +1,11 @@
-"""SparkSession factory.
+"""SparkSession factory and the engine's Spark conf.
 
-Local mode is a single JVM with N executor threads; on a real cluster the
-same conf holds except memory/parallelism are sized per executor. AQE is
-on so runtime statistics re-plan joins (broadcast conversion, skew
-splitting, partition coalescing) — our 100 TB posture relies on it.
+``ENGINE_CONF`` is the one definition of the runtime-settable SQL conf
+the engine relies on. ``get_spark`` puts it on the builder next to the
+launch-only settings; ``apply_engine_conf`` sets it on a session the
+caller built (the registry boundary runs it, so queries also see it on
+a vanilla session). Adaptive execution, partition coalescing and skew
+joins are left at Spark's defaults, which are on.
 """
 
 from __future__ import annotations
@@ -12,42 +14,66 @@ import os
 
 from pyspark.sql import SparkSession
 
+ENGINE_CONF = {
+    # at the data sizes this engine runs locally, task scheduling and
+    # shuffle-file overhead dominate (measured 2-5x on the heavy
+    # operators; the clinical DAG runs the same jobs and bytes with
+    # half the tasks of 32); AQE coalesces from here and splits skew
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # InferFiltersFromGenerate synthesizes size(child)>0 filters
+    # whose pushdown INLINES the generator child below exchanges —
+    # for expensive children (tokenize+shingle chains) the filter
+    # re-runs the whole expression, single-partition, twice
+    # (measured 4x on the shingle family at sf0.1). Our explodes
+    # never cross a shuffle before the Generate, so the inferred
+    # prune buys nothing here.
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # older testdata generations ship events.parquet ts as
+    # TIMESTAMP(NANOS), which the reader only accepts as a raw long;
+    # tables.load rebuilds it at microsecond precision
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical RAM, in whole GiB, at least ``1g``."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2 // 2**30)}g"
+
+
+def apply_engine_conf(spark: SparkSession) -> None:
+    """Set ``ENGINE_CONF`` on a session built elsewhere (the registry
+    boundary: a harness may call queries on its own session, and the
+    returned frames are lazy, so the conf must be set before they run).
+    Shuffle partitions are only ever lowered, never raised, so a
+    caller's smaller setting survives."""
+    conf = spark.conf
+    for key, value in ENGINE_CONF.items():
+        if (key == "spark.sql.shuffle.partitions"
+                and int(conf.get(key)) <= int(value)):
+            continue
+        conf.set(key, value)
+
 
 def get_spark(app_name: str = "pmc-conversion-spark",
-              cpus: int | str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for this engine.
+              cpus: int | str | None = None) -> SparkSession:
+    """Build (or reuse) a SparkSession carrying ``ENGINE_CONF``.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32 per the
-    driver contract). Shuffle partitions default to 2×cores locally; on a
-    cluster AQE coalesces them down from a higher initial number anyway.
+    Deployment settings: ``SPARK_GRAFT_CPUS`` is the local parallelism
+    (default 32), ``SPARK_DRIVER_MEMORY`` the driver heap (default
+    :func:`default_driver_memory`) and ``SPARK_LOCAL_DIRS`` the
+    shuffle/spill directory.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(str(cpus)), 32)
-        except ValueError:  # cpus == "*"
-            shuffle_partitions = 32
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # InferFiltersFromGenerate synthesizes size(child)>0 filters
-        # whose pushdown INLINES the generator child below exchanges —
-        # for expensive children (tokenize+shingle chains) the filter
-        # re-runs the whole expression, single-partition, twice
-        # (measured 4x on the shingle family at sf0.1). Our explodes
-        # never cross a shuffle before the Generate, so the inferred
-        # prune buys nothing here.
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(map=ENGINE_CONF)
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()))
         # long-lived sessions running hundreds of distinct queries
         # generate thousands of codegen classes; at the JVM default
         # (240 MB) the code cache can fill mid-run, silently disabling
@@ -58,7 +84,6 @@ def get_spark(app_name: str = "pmc-conversion-spark",
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.spill.compress", "true")
         # shuffle/spill files on tmpfs: this host's disk FS shows long
         # syscall stalls under many small shuffle files; RAM-backed
         # local dirs sidestep it (plenty of headroom at test SFs)

@@ -45,11 +45,15 @@ def tx_swap_write(df: DataFrame, live_dir: str, *, sep: str = "\t",
     :func:`jdbc_tx_load` for databases.
     """
     staging = live_dir.rstrip("/") + ".staging"
-    backup = live_dir.rstrip("/") + ".backup"
-    shutil.rmtree(staging, ignore_errors=True)
     write_tsv(df, staging, sep=sep, single_file=single_file)
-    # Commit point: two renames; if the write above failed we never get
-    # here and live survives.
+    _swap_in(staging, live_dir)
+
+
+def _swap_in(staging: str, live_dir: str) -> None:
+    """Commit point of both ``tx_swap_write`` flavours: two renames
+    publish the overwrite-written ``staging`` dir as ``live_dir``. If
+    the staging write failed we never get here and live survives."""
+    backup = live_dir.rstrip("/") + ".backup"
     shutil.rmtree(backup, ignore_errors=True)
     if os.path.exists(live_dir):
         os.rename(live_dir, backup)
@@ -307,11 +311,5 @@ def tx_swap_write_parquet(df: DataFrame, live_dir: str) -> None:
     ``live_dir`` see the old table or the new one, never a partial
     write."""
     staging = live_dir.rstrip("/") + ".staging"
-    backup = live_dir.rstrip("/") + ".backup"
-    shutil.rmtree(staging, ignore_errors=True)
     df.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(backup, ignore_errors=True)
-    if os.path.exists(live_dir):
-        os.rename(live_dir, backup)
-    os.rename(staging, live_dir)
-    shutil.rmtree(backup, ignore_errors=True)
+    _swap_in(staging, live_dir)

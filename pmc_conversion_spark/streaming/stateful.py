@@ -190,12 +190,7 @@ def running_count_tws(events: DataFrame, *, key_col: str = "user_id"
     LONG-LIVED stream, where the floor amortizes; for a one-shot
     bounded aggregation the batch form is strictly better.
     """
-    if not ensure_protobuf():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs a working google.protobuf "
-            "in the Python workers; neither an installed package nor "
-            "the bundled-runtime shim is available in this environment")
-    _shim_workers(events.sparkSession)
+    _tws_prepare(events)
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor, StatefulProcessorHandle)
@@ -215,12 +210,6 @@ def running_count_tws(events: DataFrame, *, key_col: str = "user_id"
         def close(self) -> None:
             pass
 
-    spark = events.sparkSession
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
     return (events.groupBy(key_col)
             .transformWithStateInPandas(
                 statefulProcessor=RunningCount(),
@@ -231,7 +220,8 @@ def running_count_tws(events: DataFrame, *, key_col: str = "user_id"
 
 def _tws_prepare(events: DataFrame) -> None:
     """Shared preamble for every transformWithState operator: protobuf
-    (shimmed if needed), worker delivery, RocksDB state store."""
+    (shimmed if needed), worker delivery, and the RocksDB state store
+    provider that transformWithState requires."""
     if not ensure_protobuf():
         raise NotImplementedError(
             "transformWithStateInPandas needs a working google.protobuf "

@@ -39,7 +39,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps with interval arithmetic, not ``unix_micros`` (which
     rejects NTZ)."""
     from pyspark.sql import functions as F
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(df.dtypes).get("ts") in ("bigint", "long"):
         df = df.withColumn(

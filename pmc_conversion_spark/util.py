@@ -1,4 +1,6 @@
-"""Small shared utilities."""
+"""Small shared utilities: process-private scratch dirs, unique names,
+driver-list frames, partition sizing and observed checkpoints. The
+engine's Spark conf lives in :mod:`pmc_conversion_spark.session`."""
 
 from __future__ import annotations
 
@@ -73,11 +75,8 @@ def local_df(spark, rows, schema: str) -> DataFrame:
 
 def target_partitions(df: DataFrame) -> int:
     """The session's shuffle-partition setting (AQE re-coalesces at
-    runtime anyway); falls back to default parallelism."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return df.sparkSession.sparkContext.defaultParallelism
+    runtime anyway)."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
@@ -138,27 +137,3 @@ def checkpoint_observed(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
          .localCheckpoint(eager=True))
     return d, obs.get
 
-
-def tune_local_session(spark) -> None:
-    """Runtime conf for small-SF local verification runs: a modest
-    shuffle-partition count (task-scheduling and shuffle-file syscall
-    overhead dominates at these data sizes — measured 2-5× on the heavy
-    operators) and AQE so real skew still re-plans. All of these are
-    runtime-settable, so they apply even when the caller owns the
-    SparkSession (the driver harness does)."""
-    conf = spark.conf
-    try:
-        if int(conf.get("spark.sql.shuffle.partitions")) > 8:
-            conf.set("spark.sql.shuffle.partitions", "8")
-    except Exception:
-        conf.set("spark.sql.shuffle.partitions", "8")
-    conf.set("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    conf.set("spark.sql.session.timeZone", "UTC")
-    # see session.py: the inferred size()>0 Generate filter inlines
-    # expensive generator children below exchanges (4x on the shingle
-    # family); runtime-settable, so it also protects driver-owned
-    # sessions that skip our builder.
-    conf.set("spark.sql.optimizer.excludedRules",
-             "org.apache.spark.sql.catalyst.optimizer."
-             "InferFiltersFromGenerate")

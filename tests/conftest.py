@@ -11,8 +11,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @pytest.fixture(scope="session")
 def spark():
     from pmc_conversion_spark.session import get_spark
-    s = get_spark("pytest", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"),
-                  shuffle_partitions=8)
+    s = get_spark("pytest", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
 
 

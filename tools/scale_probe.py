@@ -276,7 +276,6 @@ def probe_tws_pricing(spark, repeats: int) -> list[str]:
         from pyspark.sql import types as T
         from pyspark.sql.streaming.state import GroupStateTimeout
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = (spark.readStream.schema(raw.schema)
                   .option("pathGlobFilter", "events.parquet")

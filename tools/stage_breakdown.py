@@ -28,40 +28,22 @@ SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.1")
 
 def main(name: str) -> None:
     evdir = tempfile.mkdtemp(prefix="spark-events-")
-    from pyspark.sql import SparkSession
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # mirror pmc_conversion_spark.session.get_spark, plus the event log
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stage-breakdown")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 32)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=1g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.local.dir",
-                os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file:{evdir}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    # the event log is launch-only conf: hand it to the JVM before
+    # get_spark starts it
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true "
+        "--conf spark.eventLog.rolling.enabled=false "
+        "--conf spark.eventLog.compress=false "
+        f"--conf spark.eventLog.dir=file:{evdir} pyspark-shell")
+    from pmc_conversion_spark.session import get_spark
+    spark = get_spark("stage-breakdown")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as E
     qs = E.queries()
     fn = qs[name]
     # warmup: JIT, parquet footers, python worker pool
-    (spark.range(int(cpus)).repartition(int(cpus))
+    (spark.range(cpus).repartition(cpus)
      .mapInPandas(lambda it: it, "id long").count())
     fn(spark, SF_DIR).count()
     t_mark = time.time() * 1000.0
