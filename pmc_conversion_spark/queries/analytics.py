@@ -394,7 +394,7 @@ def sketch_theta_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     sb, bb, tb, nb = bottom("F", "b")
     thetas = ta.crossJoin(tb).withColumn(
         "theta", F.least("theta_a", "theta_b"))
-    common = (ba.join(bb, "h").crossJoin(F.broadcast(thetas))
+    common = (ba.join(bb, "h").crossJoin(thetas)
               .filter(F.col("h") <= F.col("theta"))
               .agg(F.count(F.lit(1)).alias("n_common")))
     exact_i = (sa.join(sb, "o_custkey")
@@ -450,7 +450,7 @@ def sql_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("better").isNull()
                     | (F.col("better") > F.col("mp")))
             .select("p_size", "mp"))
-    return (p.join(F.broadcast(keep), "p_size")
+    return (p.join(keep, "p_size")
             .filter(F.col("p_retailprice") == F.col("mp"))
             .select("p_partkey", "p_size",
                     F.round("p_retailprice", 2).alias("price")))
@@ -723,8 +723,8 @@ def win_percent_change_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-           .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
+    rev = (o.join(c, o.o_custkey == c.c_custkey)
+           .join(n, F.col("c_nationkey") == n.n_nationkey)
            .groupBy(F.col("n_name").alias("nation"),
                     F.year("o_orderdate").alias("o_year"))
            .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -772,7 +772,7 @@ def agg_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = o.select(F.substring(cents.cast("string"), 1, 1).alias("digit"))
     c = d.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
     t = c.agg(F.sum("n").alias("total"))
-    return (c.crossJoin(F.broadcast(t))
+    return (c.crossJoin(t)
             .select("digit", "n",
                     F.round(F.col("n").cast("double") / F.col("total"), 6)
                     .alias("observed_freq"),
@@ -839,7 +839,7 @@ def join_nearest_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pow(F.sin(F.radians(F.col("wlat") - F.col("lat")) / 2), 2)
         + F.cos(F.radians("lat")) * F.cos(F.radians("wlat"))
         * F.pow(F.sin(F.radians(F.col("wlon") - F.col("lon")) / 2), 2))), 3)
-    scored = (cust.crossJoin(F.broadcast(wh))
+    scored = (cust.crossJoin(wh)
               .select("c_custkey",
                       F.struct(km.alias("km"),
                                F.col("wid").alias("wid")).alias("s")))
@@ -1420,7 +1420,7 @@ def join_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers."""
     c = tables.load(spark, sf_dir, "customer")
     s = tables.load(spark, sf_dir, "supplier")
-    pairs = (c.join(F.broadcast(s),
+    pairs = (c.join(s,
                     s.s_nationkey == c.c_nationkey)
              .select(
                  F.when(F.floor(F.col("c_acctbal") / 1000.0)
@@ -1442,7 +1442,7 @@ def join_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
           .otherwise(F.log2(0.1 / (1 - F.col("u2"))))
           + F.when(F.col("a_key") == 1, F.log2(0.85 / F.col("u3")))
           .otherwise(F.log2(0.15 / (1 - F.col("u3")))))
-    w = pairs.crossJoin(F.broadcast(u)).select(wt.alias("wt"))
+    w = pairs.crossJoin(u).select(wt.alias("wt"))
     return (w.groupBy(F.floor("wt").cast("bigint").alias("weight_band"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
                  F.round(F.avg("wt"), 6).alias("avg_weight")))
@@ -1999,7 +1999,7 @@ def join_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmc_conversion_spark.util import local_df
     poly = local_df(pts.sparkSession, edges,
                     "x1 int, y1 int, x2 int, y2 int")
-    e = pts.crossJoin(F.broadcast(poly))
+    e = pts.crossJoin(poly)
     lhs = (F.col("px") - F.col("x1")) * (F.col("y2") - F.col("y1"))
     rhs = (F.col("py") - F.col("y1")) * (F.col("x2") - F.col("x1"))
     straddles = ((F.col("y1") > F.col("py"))
@@ -2013,7 +2013,7 @@ def join_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     npts = pts.agg(F.count(F.lit(1)).alias("np"))
     return (inside.agg(F.count(F.lit(1)).alias("n_inside"),
                        F.sum("id").alias("inside_id_sum"))
-            .crossJoin(F.broadcast(npts))
+            .crossJoin(npts)
             .select(F.col("np").cast("bigint").alias("n_points"),
                     F.col("n_inside").cast("bigint").alias("n_inside"),
                     F.col("inside_id_sum").cast("bigint")

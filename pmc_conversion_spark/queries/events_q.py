@@ -110,7 +110,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin uses withWatermark (tests)."""
     e = _events(spark, sf_dir)
     cutoff = e.agg((F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("cutoff"))
-    return (e.crossJoin(F.broadcast(cutoff))
+    return (e.crossJoin(cutoff)
             .filter(F.col("ts") >= F.col("cutoff"))
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -179,7 +179,7 @@ def stream_watermark_dropped(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation pass computes kept and dropped together."""
     e = _events(spark, sf_dir)
     cutoff = e.agg((F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("cutoff"))
-    return (e.crossJoin(F.broadcast(cutoff))
+    return (e.crossJoin(cutoff)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_total"),
                  F.count(F.when(F.col("ts") < F.col("cutoff"), 1))
@@ -471,12 +471,13 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (user profile). In streaming form the static side needs
     no watermark and re-broadcasts per micro-batch (exercised with real
     readStream machinery in tests/test_streaming.py); this batch twin
-    pins the join semantics. The dimension is broadcast — the event
-    side never shuffles."""
+    pins the join semantics. The planner broadcasts the dimension while
+    it is under ``autoBroadcastJoinThreshold``; the event side then
+    never shuffles."""
     e = _events(spark, sf_dir)
     c = (tables.load(spark, sf_dir, "customer")
          .select("c_custkey", F.col("c_mktsegment").alias("segment")))
-    return (e.join(F.broadcast(c), e.user_id == c.c_custkey)
+    return (e.join(c, e.user_id == c.c_custkey)
             .select("event_id", "user_id", "event_type", "segment"))
 
 
@@ -1095,7 +1096,8 @@ def agg_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     this estimates ALL of them). One per-user lag window (the
     sequence order is (second, event_id) — total and portable), then
     two partial-aggregable counts; the row-total join is
-    transition-matrix-sized, broadcast by construction."""
+    transition-matrix-sized, so the planner broadcasts it while it is
+    under ``autoBroadcastJoinThreshold``."""
     e = _events(spark, sf_dir)
     w = (Window.partitionBy("user_id")
          .orderBy(F.col("ts").cast("timestamp").cast("long"), "event_id"))
@@ -1106,7 +1108,7 @@ def agg_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("event_type").alias("to_type"))
          .agg(F.count(F.lit(1)).alias("n")))
     t = c.groupBy("from_type").agg(F.sum("n").alias("row_total"))
-    return (c.join(F.broadcast(t), "from_type")
+    return (c.join(t, "from_type")
             .select("from_type", "to_type", "n",
                     F.round(F.col("n").cast("double")
                             / F.col("row_total"), 6).alias("p")))
@@ -1364,7 +1366,7 @@ def agg_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg((F.max("day") - F.min("day")).alias("span_days")))
     t = spans.agg(F.count(F.lit(1)).alias("n_users"))
     ks = spark.range(0, 8).select(F.col("id").alias("day_k"))
-    joined = F.broadcast(ks).crossJoin(spans).crossJoin(F.broadcast(t))
+    joined = ks.crossJoin(spans).crossJoin(t)
     return (joined.groupBy("day_k", "n_users")
             .agg(F.sum(F.when(F.col("span_days") >= F.col("day_k"), 1)
                        .otherwise(0)).alias("n_surviving"))
@@ -2623,7 +2625,7 @@ def agg_time_decay_engagement(spark: SparkSession,
     ref = e.agg(F.max("ts").alias("t_max"))
     scored = (e.filter(F.col("event_type")
                        .isin("click", "view", "purchase"))
-              .crossJoin(F.broadcast(ref))
+              .crossJoin(ref)
               .select(
                   "user_id",
                   F.round(
@@ -2689,7 +2691,7 @@ def ts_fourier_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count(F.lit(1)).alias("c"))
               .select(F.col("w.start").alias("h"), "c"))
     t0 = hourly.agg(F.min("h").alias("t0"))
-    idx = (hourly.crossJoin(F.broadcast(t0))
+    idx = (hourly.crossJoin(t0)
            .select(F.expr("timestampdiff(HOUR, t0, h)").alias("n"), "c"))
     periods = F.array(F.lit(12), F.lit(24), F.lit(168))
     terms = (idx.select("n", "c", F.explode(periods).alias("period"))
@@ -2778,7 +2780,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select(F.col("w.start").alias("h"), "c")
               .localCheckpoint(eager=True))
     t0 = hourly.agg(F.min("h").alias("t0"))
-    s = (hourly.crossJoin(F.broadcast(t0))
+    s = (hourly.crossJoin(t0)
          .select(F.expr("timestampdiff(HOUR, t0, h)").alias("n"),
                  F.hour("h").alias("hod"), "c"))
     w = Window.orderBy("n").rowsBetween(-12, 12)  # bounded series frame
@@ -2793,12 +2795,12 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.count(F.lit(1)).alias("n_obs"),
                (F.sum("d").cast("double") / F.count(F.lit(1)))
                .alias("seasonal")))
-    re = (dt.join(F.broadcast(se), "hod")
+    re = (dt.join(se, "hod")
           .select("d", F.round(F.col("d") - F.col("seasonal"), 6)
                   .cast("decimal(18,6)").alias("r")))
     v = re.agg(F.sum(F.col("d") * F.col("d")).cast("double").alias("tv"),
                F.sum(F.col("r") * F.col("r")).cast("double").alias("rv"))
-    return (se.crossJoin(F.broadcast(v))
+    return (se.crossJoin(v)
             .select("hod", "n_obs",
                     F.round("seasonal", 4).alias("seasonal"),
                     F.round(1 - F.col("rv") / F.col("tv"), 4)
@@ -3175,7 +3177,7 @@ def win_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count(F.lit(1)).alias("c"))
               .select(F.col("w.start").alias("h"), "c"))
     t0 = hourly.agg(F.min("h").alias("t0"))
-    s = (hourly.crossJoin(F.broadcast(t0))
+    s = (hourly.crossJoin(t0)
          .select(F.expr("timestampdiff(HOUR, t0, h)").alias("n"), "c"))
     w = Window.orderBy("n")  # bounded hourly series frame
     pred = s.select(
@@ -3340,9 +3342,9 @@ def agg_littles_law(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.max("t_out").alias("h1"))
     m = (sess.agg(F.count(F.lit(1)).alias("n_users"),
                   F.sum(span).cast("bigint").alias("busy_us"))
-         .crossJoin(F.broadcast(horizon.select(
+         .crossJoin(horizon.select(
              F.expr("timestampdiff(MICROSECOND, h0, h1)")
-             .alias("span_us")))))
+             .alias("span_us"))))
     lam = F.col("n_users") / (F.col("span_us") / 3600e6)
     w = F.col("busy_us") / F.col("n_users").cast("double") / 3600e6
     l = F.col("busy_us").cast("double") / F.col("span_us")
@@ -3543,7 +3545,7 @@ def agg_spc_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("c").cast("double") / F.count(F.lit(1))).alias("xbar"),
         (F.sum("moving_range").cast("double")
          / F.count("moving_range")).alias("mrbar"))
-    j = mr.crossJoin(F.broadcast(lim))
+    j = mr.crossJoin(lim)
     lcl = F.col("xbar") - 2.66 * F.col("mrbar")
     ucl = F.col("xbar") + 2.66 * F.col("mrbar")
     return (j.filter((F.col("c") < lcl) | (F.col("c") > ucl))
@@ -3907,7 +3909,7 @@ def ts_piecewise_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg((F.lit(9999)
                 - F.max(F.abs("cusum") * 10000 + k_term) % 10000)
                .cast("bigint").alias("kstar")))
-    j = idx.join(F.broadcast(cp), "event_type")
+    j = idx.join(cp, "event_type")
     pre = F.col("k") <= F.col("kstar")
 
     def s(cond, expr):
@@ -4195,7 +4197,7 @@ def agg_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_resurrected"))
     prev = per.select((F.col("m") + 1).alias("m"),
                       F.col("active").alias("prev_active"))
-    return (per.join(F.broadcast(prev), "m", "left")
+    return (per.join(prev, "m", "left")
             .select(F.col("m").alias("week_idx"),
                     F.col("active").cast("bigint").alias("active"),
                     F.col("n_new").cast("bigint").alias("new_users"),
@@ -4270,7 +4272,7 @@ def agg_retention_curve_expfit(spark: SparkSession,
     sizes = cohorted.groupBy("c").agg(
         F.countDistinct("user_id").alias("n0"))
     points = (cohorted.filter(F.col("w") > F.col("c"))
-              .join(F.broadcast(sizes), "c")
+              .join(sizes, "c")
               .groupBy("c", (F.col("w") - F.col("c")).alias("o"))
               .agg(F.countDistinct("user_id").alias("k"),
                    F.first("n0").alias("n0")))
@@ -4618,7 +4620,7 @@ def ts_ses_alpha_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pmc_conversion_spark.util import local_df
     alphas = local_df(
         spark, [(0.1,), (0.3,), (0.5,), (0.7,), (0.9,)], "alpha double")
-    grid = series.crossJoin(F.broadcast(alphas))
+    grid = series.crossJoin(alphas)
     fin = grid.withColumn("st", F.expr(
         "aggregate(slice(xs, 2, greatest(size(xs) - 1, 0)), "
         "named_struct('l', xs[0], 'sse', 0.0D), "
@@ -4993,7 +4995,7 @@ def agg_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .alias("theil_sen_slope"),
                       F.round(F.avg("slope"), 6)
                       .alias("mean_pairwise_slope"))
-            .crossJoin(F.broadcast(n_days))
+            .crossJoin(n_days)
             .select(F.col("n_days").cast("bigint").alias("n_days"),
                     "n_pairs", "theil_sen_slope",
                     "mean_pairwise_slope"))
@@ -5135,7 +5137,7 @@ def ts_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("double")
                     / F.count(F.lit(1))).alias("xbar"))
     r1, r2 = F.col("r1"), F.col("r2")
-    j = (rw.crossJoin(F.broadcast(last2)).crossJoin(F.broadcast(mu))
+    j = (rw.crossJoin(last2).crossJoin(mu)
          .select("n_days", "xbar", "xt", "xt1",
                  (r1 * (1 - r2) / (1 - r1 * r1)).alias("phi1"),
                  ((r2 - r1 * r1) / (1 - r1 * r1)).alias("phi2")))
@@ -5213,10 +5215,10 @@ def win_max_subarray(spark: SparkSession, sf_dir: str) -> DataFrame:
                        - F.least(F.col("minb"), F.lit(0))).alias("gain"))
     best = g.agg(F.max("gain").alias("max_gain"))
     nd = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
-    return (g.join(F.broadcast(best), F.col("gain") == F.col("max_gain"))
+    return (g.join(best, F.col("gain") == F.col("max_gain"))
             .groupBy("max_gain")
             .agg(F.min("d").alias("end_day"))
-            .crossJoin(F.broadcast(nd))
+            .crossJoin(nd)
             .select(F.col("max_gain").cast("bigint").alias("max_gain"),
                     "end_day", "n_days"))
 
@@ -5591,7 +5593,7 @@ def ts_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     coef = s.select("n", b.alias("b"), "st", "sy")
     a = (F.col("sy").cast("double") - F.col("b") * F.col("st")) \
         / F.col("n")
-    th = (idx.crossJoin(F.broadcast(coef))
+    th = (idx.crossJoin(coef)
           .select(F.struct("t",
                            (2.0 * F.col("rev") - (a + F.col("b")
                                                   * F.col("t")))
@@ -5682,7 +5684,7 @@ def ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = idx.agg(F.count(F.lit(1)).alias("n"),
                   F.sum("y").alias("sy"),
                   F.sum(dec("y") * F.col("y")).alias("syy"))
-    segm = (idx.crossJoin(F.broadcast(tot))
+    segm = (idx.crossJoin(tot)
             .select(F.floor((F.col("rn") - 1) * 16
                             / F.col("n").cast("double"))
                     .cast("bigint").alias("seg"),
@@ -5705,7 +5707,7 @@ def ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.concat_ws(
                 "", F.expr("transform(sort_array(collect_list(s)),"
                            " x -> x.symbol)")).alias("w")))
-    return (sym.crossJoin(F.broadcast(word))
+    return (sym.crossJoin(word)
             .select("seg", F.col("n_days").cast("bigint")
                     .alias("n_days"),
                     F.round("z", 6).alias("paa_z"), "symbol",
@@ -5768,7 +5770,7 @@ def ts_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.round(F.sum("l_quantity")).cast("long").alias("y")))
     lags = spark.range(-7, 8).select(F.col("id").cast("int")
                                      .alias("lag"))
-    j = (xd.crossJoin(F.broadcast(lags))
+    j = (xd.crossJoin(lags)
          .join(yd.withColumnRenamed("t", "ty"),
                F.col("ty") == F.col("t") + F.col("lag"))
          .select("lag", "x", "y"))
@@ -6066,7 +6068,7 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = g.select(F.col("p").alias("q"), F.col("mu").alias("mu_b"),
                  F.col("sg").alias("sg_b"),
                  *[F.col(f"w{k}").alias(f"v{k}") for k in range(7)])
-    pairs = g.join(F.broadcast(b),
+    pairs = g.join(b,
                    F.abs(F.col("p") - F.col("q")) >= 4)
     dot = sum(dec(f"w{k}") * F.col(f"v{k}") for k in range(7))
     r = ((dot.cast("double") - 7.0 * F.col("mu") * F.col("mu_b"))
@@ -6323,7 +6325,7 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcol = F.least(F.lit(51),
                    ((F.dayofyear("o_orderdate") - 1) / 7).cast("int"))
     wk = (o.join(c, o.o_custkey == c.c_custkey)
-          .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+          .join(n, c.c_nationkey == n.n_nationkey)
           .groupBy("n_name", wcol.alias("w"))
           .agg(F.count(F.lit(1)).alias("c")))
     al = (wk.groupBy("n_name")
@@ -6340,7 +6342,7 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("nb", F.expr(
             "transform(sequence(0, 51), "
             "w -> coalesce(element_at(m, w), 0L))").alias("bv")))
-    frame = al.crossJoin(F.broadcast(gl))
+    frame = al.crossJoin(gl)
 
     def _dtw(batches):
         import numpy as np
@@ -6449,12 +6451,12 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy("d").agg(F.count(F.lit(1)).alias("y")))
     t0 = daily.agg(F.min("d").alias("t0"),
                    F.count(F.lit(1)).alias("nn"))
-    idx = (daily.crossJoin(F.broadcast(t0))
+    idx = (daily.crossJoin(t0)
            .select(F.datediff(F.col("d"), F.col("t0")).alias("n"),
                    "y", "nn"))
     ks = spark.range(1, 17).select(F.col("id").alias("k"))
     ang = 2 * math.pi * F.col("k") * F.col("n") / F.col("nn")
-    terms = (idx.crossJoin(F.broadcast(ks))
+    terms = (idx.crossJoin(ks)
              .select("k", "n", "nn",
                      (F.col("y") * F.cos(ang)).alias("ct"),
                      (F.col("y") * F.sin(ang)).alias("st")))
@@ -6481,7 +6483,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                        "greatest(size(pl) - 1, 0)), "
                        "transform(pl, x -> ln(x))[0], "
                        "(a, x) -> a + x)").alias("tlp")))
-    pt = pw.crossJoin(F.broadcast(tot))
+    pt = pw.crossJoin(tot)
     ent = (pt.agg(
         F.expr("transform(array_sort(collect_list(struct(k, "
                "-(p / tp) * ln(p / tp) as e))), s -> s.e)")
@@ -6494,8 +6496,8 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .alias("pn"))
             .orderBy(F.desc("pn"), "k").limit(1))
     nd = pw.agg(F.max("nn").cast("bigint").alias("n_days"))
-    return (nd.crossJoin(F.broadcast(peak))
-            .crossJoin(F.broadcast(ent))
+    return (nd.crossJoin(peak)
+            .crossJoin(ent)
             .select("n_days",
                     F.col("k").cast("bigint").alias("peak_harmonic"),
                     F.round("h", 4).alias("spectral_entropy_norm"),
@@ -6624,7 +6626,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("y", 2).over(w).alias("w2"))
     b = pos.select(F.col("p").alias("q"), F.col("w0").alias("v0"),
                    F.col("w1").alias("v1"), F.col("w2").alias("v2"))
-    pairs = pos.join(F.broadcast(b), F.col("p") < F.col("q"))
+    pairs = pos.join(b, F.col("p") < F.col("q"))
     chb2 = F.greatest(F.abs(F.col("w0") - F.col("v0")),
                       F.abs(F.col("w1") - F.col("v1")))
     chb3 = F.greatest(F.abs(F.col("w0") - F.col("v0")),
@@ -6636,7 +6638,7 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("w2").isNotNull() & F.col("v2").isNotNull()
                      & (chb3 <= 2), 1).otherwise(0)).alias("a_cnt"))
     n = daily.agg(F.count(F.lit(1)).alias("nn"))
-    return (agg.crossJoin(F.broadcast(n))
+    return (agg.crossJoin(n)
             .select(F.col("nn").cast("bigint").alias("n_days"),
                     F.col("b_cnt").cast("bigint")
                     .alias("template_matches_m2"),
@@ -7179,7 +7181,7 @@ def ts_kpss_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.sum("y").cast(dec).alias("sy"))
     w = Window.orderBy("d")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    e = (daily.crossJoin(F.broadcast(s0))
+    e = (daily.crossJoin(s0)
          .select("d",
                  (F.col("n") * F.col("y") - F.col("sy")).alias("ne"),
                  (F.col("n") * F.sum("y").over(wrun)
@@ -7196,7 +7198,7 @@ def ts_kpss_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     lrv6 = (6 * F.col("g0")
             + 2 * (5 * F.col("g1") + 4 * F.col("g2") + 3 * F.col("g3")
                    + 2 * F.col("g4") + F.col("g5")))
-    f = (g.crossJoin(F.broadcast(s0))
+    f = (g.crossJoin(s0)
          .select("ss2", lrv6.alias("lrv6"), "n"))
     stat = 6.0 * F.col("ss2").cast("double") \
         / (F.col("n").cast("double") * F.col("lrv6").cast("double"))
@@ -7285,7 +7287,7 @@ def ts_pettitt_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("m2").over(wd.rowsBetween(Window.unboundedPreceding,
                                         Window.currentRow))
         .cast(dec).alias("w2"))
-    s = (u.crossJoin(F.broadcast(n0))
+    s = (u.crossJoin(n0)
          .filter(F.col("t") < F.col("n"))
          .select("t", "n",
                  (F.col("w2") - F.col("t").cast(dec)
@@ -7429,7 +7431,7 @@ def ts_snht(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").cast(dec).alias("sy"),
         F.sum(F.col("y").cast(dec) * F.col("y")).cast(dec).alias("syy"))
     wd = Window.orderBy("d")
-    a = (daily.crossJoin(F.broadcast(s0))
+    a = (daily.crossJoin(s0)
          .select(F.row_number().over(wd).alias("t"),
                  (F.col("n")
                   * F.sum("y").over(wd.rowsBetween(
@@ -7514,7 +7516,7 @@ def ts_bartels_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     m2 = (2 * F.rank().over(Window.orderBy("y"))
           + F.count(F.lit(1)).over(Window.partitionBy("y")) - 1)
     r = daily.select("d", m2.cast(dec).alias("m2"))
-    lx = (r.crossJoin(F.broadcast(n0))
+    lx = (r.crossJoin(n0)
           .select("m2", F.lead("m2").over(Window.orderBy("d"))
                   .alias("m2n"), "n"))
     g = lx.agg(
@@ -7627,7 +7629,7 @@ def ts_dfa_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     s0 = daily.agg(F.count(F.lit(1)).cast(dec).alias("n"),
                    F.sum("y").cast(dec).alias("sy"))
     wd = Window.orderBy("d")
-    p = (daily.crossJoin(F.broadcast(s0))
+    p = (daily.crossJoin(s0)
          .select(F.row_number().over(wd).alias("t"),
                  (F.col("n")
                   * F.sum("y").over(wd.rowsBetween(
@@ -7638,7 +7640,7 @@ def ts_dfa_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
                  "n"))
     scales = spark.range(0, 5).select(
         F.expr("shiftleft(4, cast(id AS int))").alias("s"))
-    wframe = (p.crossJoin(F.broadcast(scales))
+    wframe = (p.crossJoin(scales)
               .select("s",
                       ((F.col("t") - 1) / F.col("s"))
                       .cast("bigint").alias("widx"),
@@ -7745,7 +7747,7 @@ def ts_higuchi_fd(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("t"), "y")
     ks = spark.range(0, 5).select(
         F.expr("shiftleft(1, cast(id AS int))").alias("k"))
-    pk = p.crossJoin(F.broadcast(ks))
+    pk = p.crossJoin(ks)
     a = pk.alias("a")
     b = pk.alias("b")
     df = (a.join(b, (F.col("b.k") == F.col("a.k"))
@@ -7756,7 +7758,7 @@ def ts_higuchi_fd(spark: SparkSession, sf_dir: str) -> DataFrame:
     gm = (df.groupBy("k", "m")
           .agg(F.sum("ad").cast(dec).alias("sd"),
                F.count(F.lit(1)).alias("c")))
-    lm = (gm.crossJoin(F.broadcast(n0))
+    lm = (gm.crossJoin(n0)
           .select("k",
                   F.round(F.col("sd").cast("double")
                           * (F.col("n") - 1).cast("double")
@@ -7771,7 +7773,7 @@ def ts_higuchi_fd(spark: SparkSession, sf_dir: str) -> DataFrame:
           for k in (1, 2, 4, 8, 16)])
     slope = ((-2.0 * F.col("y1") - F.col("y2") + F.col("y8")
               + 2.0 * F.col("y16")) / (10.0 * F.log(F.lit(2.0))))
-    return (pv2.crossJoin(F.broadcast(n0))
+    return (pv2.crossJoin(n0)
             .select(F.col("n").cast("bigint").alias("n_days"),
                     F.round(-slope, 6).alias("higuchi_fd"),
                     F.round("y1", 6).alias("log_l1")))
@@ -7838,7 +7840,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.sum("c").cast("bigint").alias("ntb"),
                F.count(F.lit(1)).alias("np"))
     pr = F.col("c") / F.col("nt")
-    h = (g.crossJoin(F.broadcast(n0))
+    h = (g.crossJoin(n0)
          .agg(F.sum(F.round(-pr * F.log(pr), 12)
                     .cast("decimal(38,12)")).cast("double")
               .alias("hsum"),
@@ -7986,7 +7988,7 @@ def ts_engle_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = ((F.col("sy").cast("double") - b * F.col("sx").cast("double"))
          / F.col("n").cast("double"))
     fit = mom.select("n", b.alias("b"), a.alias("a"))
-    res = (lvl.crossJoin(F.broadcast(fit))
+    res = (lvl.crossJoin(fit)
            .select("d",
                    F.round((F.col("y").cast("double") - F.col("a")
                             - F.col("b") * F.col("x").cast("double"))
@@ -8005,7 +8007,7 @@ def ts_engle_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
            + rho * rho * F.col("see").cast("double"))
           / (F.col("nd") - 1).cast("double"))
     t = rho / F.sqrt(s2 / F.col("see").cast("double"))
-    return (dfm.crossJoin(F.broadcast(fit))
+    return (dfm.crossJoin(fit)
             .select(F.col("n").cast("bigint").alias("n_days"),
                     F.round("b", 6).alias("coint_beta"),
                     F.round(t, 6).alias("df_stat"),
@@ -8218,7 +8220,7 @@ def agg_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     exx = pair_mean("xv", "xv", "xx")
     eyy = pair_mean("yv", "yv", "yy")
     n = seg.agg(F.count(F.lit(1)).alias("n_days"))
-    j = (exy.crossJoin(exx).crossJoin(eyy).crossJoin(F.broadcast(n)))
+    j = (exy.crossJoin(exx).crossJoin(eyy).crossJoin(n))
     m = lambda nm: (F.col(f"s_{nm}").cast("double")
                     / F.col(f"k_{nm}").cast("double"))
     e = 2.0 * m("xy") - m("xx") - m("yy")
@@ -8301,7 +8303,7 @@ def dq_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     nx = xs.agg(F.count(F.lit(1)).alias("n_ref"))
     ny = ys.agg(F.count(F.lit(1)).alias("n_cur"))
     j = (kxx.crossJoin(kyy).crossJoin(kxy)
-         .crossJoin(F.broadcast(nx)).crossJoin(F.broadcast(ny)))
+         .crossJoin(nx).crossJoin(ny))
     m = lambda nm: (F.col(f"s_{nm}")
                     / F.col(f"k_{nm}").cast("double"))
     mmd2 = m("xx") + m("yy") - 2.0 * m("xy")
@@ -8360,7 +8362,7 @@ def ts_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     n0 = idx.agg((F.floor(F.count(F.lit(1)) / 2)).alias("half"))
     a = idx.alias("a")
     b = idx.alias("b")
-    pairs = (a.crossJoin(F.broadcast(n0))
+    pairs = (a.crossJoin(n0)
              .filter(F.col("a.t") <= F.col("half"))
              .join(b, F.col("b.t") == F.col("a.t") + F.col("half"))
              .select(F.col("a.y").alias("y1"),

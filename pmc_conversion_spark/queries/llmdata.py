@@ -1475,7 +1475,7 @@ def sketch_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "token", "true_n", "seed",
         (DD.md5_int60(F.concat_ws(":", "seed", "token"))
          % _CMS_WIDTH).alias("bucket"))
-    return (probes.join(F.broadcast(cells), ["seed", "bucket"])
+    return (probes.join(cells, ["seed", "bucket"])
             .groupBy("token", "true_n")
             .agg(F.min("n").alias("est_n")))
 
@@ -1568,14 +1568,14 @@ def vocab_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         matches, F.lit(0),
         lambda acc, m: F.when((m == 1) & (acc % 2 == 0), acc + 3)
         .otherwise(acc - acc % 2)) / 2).cast("long")
-    merged = (sym.crossJoin(F.broadcast(best))
+    merged = (sym.crossJoin(best)
               .select((F.col("n") * greedy).alias("m"),
                       "ba", "bb", "pair_count")
               .groupBy("ba", "bb", "pair_count")
               .agg(F.sum("m").alias("n_merges")))
     tot = vocab.agg(
         F.sum(F.col("n") * F.length("tok")).alias("total_symbols"))
-    return (merged.crossJoin(F.broadcast(tot))
+    return (merged.crossJoin(tot)
             .select(F.col("ba").alias("pair_a"),
                     F.col("bb").alias("pair_b"),
                     F.col("pair_count").cast("long").alias("pair_count"),
@@ -2566,8 +2566,8 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log10(F.coalesce(F.col("cnt").cast("double"), F.lit(0.5))
                 / F.col("n_total").cast("double")), 6) \
         .cast("decimal(12,6)")
-    scored = (toks.join(F.broadcast(vocab), "token", "left")
-              .join(F.broadcast(total))
+    scored = (toks.join(vocab, "token", "left")
+              .join(total)
               .select("doc_id", lp.alias("lp")))
     return (scored.groupBy("doc_id")
             .agg(F.round(F.sum("lp").cast("double")
@@ -2884,7 +2884,7 @@ def pipeline_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     heldout = d.select("doc_id", "text").filter(b >= 9000)
     bad = (DD.decontaminate(train.select("doc_id", "text"), heldout, n=5)
            .select("doc_id"))
-    clean = train.join(F.broadcast(bad), "doc_id", "left_anti")
+    clean = train.join(bad, "doc_id", "left_anti")
     mixed = mixture_weighted(clean.select("doc_id", "source", "ntok"),
                              "source", "doc_id",
                              {"src0": 2.0, "src1": 1.5, "src2": 0.25},
@@ -2928,7 +2928,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
           .localCheckpoint(eager=True))
     dfq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n"))
-    scored = (tf.join(F.broadcast(dfq), "tok").crossJoin(F.broadcast(n))
+    scored = (tf.join(dfq, "tok").crossJoin(n)
               .select("doc_id", "tok", "tf",
                       F.round(F.col("tf")
                               * F.log(F.col("n").cast("double")
@@ -3283,7 +3283,7 @@ def sim_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate(F.zip_with("sv", "cv",
                                lambda a, b: (a - b) * (a - b)),
                     F.lit(0.0), lambda acc, x: acc + x), 6)
-    scored = (sliced.join(F.broadcast(cents),
+    scored = (sliced.join(cents,
                           sliced.sub == cents.csub)
               .select("vec_id", "sub",
                       F.struct(dist.alias("dist"),
@@ -3772,7 +3772,7 @@ def agg_label_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
     t = c.agg(F.sum("n").alias("total"))
     p = F.col("n").cast("double") / F.col("total")
-    return (c.crossJoin(F.broadcast(t))
+    return (c.crossJoin(t)
             .select("label", "n",
                     F.round(p, 6).alias("share"),
                     F.round(-p * F.log(p), 6).alias("entropy_term")))
@@ -4001,7 +4001,7 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
          .groupBy("source").agg(F.sum("nt").alias("n_tokens")))
     pw = s.withColumn("w", F.pow(F.col("n_tokens").cast("double"), 0.7))
     t = pw.agg(F.sum("w").alias("tw"), F.sum("n_tokens").alias("tt"))
-    return (pw.crossJoin(F.broadcast(t))
+    return (pw.crossJoin(t)
             .select("source", "n_tokens",
                     F.round(F.col("n_tokens").cast("double")
                             / F.col("tt"), 6).alias("natural_share"),
@@ -4914,7 +4914,7 @@ def sim_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select(F.col("vec_id").alias("cid"),
                      F.col("v").alias("cv")))
     sim = F.round(SIM.cosine(F.col("v"), F.col("cv")), 6)
-    scored = (emb.crossJoin(F.broadcast(cents))
+    scored = (emb.crossJoin(cents)
               .select("vec_id", "label",
                       F.struct((-sim).alias("negsim"),
                                F.col("cid").alias("cid")).alias("k")))
@@ -5042,11 +5042,11 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token mass still aggregates over the FULL tf (partial aggs).
     top_k = tf.orderBy(F.col("f").desc(), "tok").limit(max(_COVERAGE_KS))
     ranked = (_bounded_rank_by_freq(top_k)
-              .crossJoin(F.broadcast(tf.agg(F.sum("f").alias("total")))))
+              .crossJoin(tf.agg(F.sum("f").alias("total"))))
     ks = spark.range(1).select(
         F.explode(F.array(*[F.lit(k) for k in _COVERAGE_KS]))
         .alias("k"))
-    return (F.broadcast(ks).crossJoin(ranked)
+    return (ks.crossJoin(ranked)
             .groupBy("k")
             .agg(F.round(
                 F.sum(F.when(F.col("r") <= F.col("k"), F.col("f"))
@@ -5208,7 +5208,7 @@ def vocab_bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     vv = (d.select(F.explode(toks).alias("tok"))
           .agg(F.countDistinct("tok").alias("v"))
           .localCheckpoint(eager=True))
-    contrib = (c2.join(c1, "w1").crossJoin(F.broadcast(vv))
+    contrib = (c2.join(c1, "w1").crossJoin(vv)
                .select("c2", F.round(
                    -F.col("c2") * F.log((F.col("c2") + 1)
                                         / (F.col("c1") + F.col("v"))
@@ -5218,7 +5218,7 @@ def vocab_bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_bigram_types"),
         F.sum("c2").alias("n_bigrams"),
         F.round(F.sum("nll").cast("double"), 4).alias("total_nll"))
-        .crossJoin(F.broadcast(vv.select(F.col("v").alias("vocab_v"))))
+        .crossJoin(vv.select(F.col("v").alias("vocab_v")))
         .select("n_bigram_types", "n_bigrams", "vocab_v", "total_nll"))
 
 
@@ -5430,7 +5430,7 @@ def sketch_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = h.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= 8)
     kth = (r.filter(F.col("r") == 8)
            .select("event_type", F.col("hv").alias("h8")))
-    return (r.join(F.broadcast(kth), "event_type")
+    return (r.join(kth, "event_type")
             .select("event_type", "r", "event_id", "hv",
                     F.round(F.lit(7.0) * F.lit(1152921504606846976.0)
                             / F.col("h8")).cast("long").alias("est_n")))
@@ -5684,7 +5684,7 @@ def sample_importance_reweight(spark: SparkSession,
     cur = d.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     tot = cur.agg(F.sum("n").alias("total"),
                   F.count(F.lit(1)).alias("k"))
-    j = cur.crossJoin(F.broadcast(tot))
+    j = cur.crossJoin(tot)
     share = F.col("n") / F.col("total").cast("double")
     w = (1.0 / F.col("k")) / share
     w2sum = F.sum(F.col("n") * w * w).over(Window.partitionBy())
@@ -6057,7 +6057,7 @@ def sim_random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = pr.select(F.col("vec_id").alias("id_b"),
                   F.col("vi").alias("vb"), F.col("pj").alias("pb")) \
         .filter(F.col("id_b") >= 10)
-    j = a.crossJoin(F.broadcast(b))
+    j = a.crossJoin(b)
     d2p = F.expr("aggregate(zip_with(pa, pb, (x, y) -> (x - y) * (x - y)), "
                  "0L, (acc, x) -> acc + x)")
     d2o = F.expr("aggregate(zip_with(va, vb, (x, y) -> (x - y) * (x - y)), "
@@ -6290,9 +6290,9 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"))
     dfq = (tf.filter(F.col("tok").isin(*_BM25_TERMS))
            .groupBy("tok").agg(F.count(F.lit(1)).alias("df")))
-    per = (tf.join(F.broadcast(dfq), "tok")
+    per = (tf.join(dfq, "tok")
            .join(dl, "doc_id")
-           .crossJoin(F.broadcast(stats))
+           .crossJoin(stats)
            .select(
                "doc_id", "tok",
                (F.log((F.col("n") - F.col("df") + 0.5)
@@ -6373,7 +6373,7 @@ def text_chi2_feature_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_tok.agg(
         F.sum("a").cast("double").alias("tot_pos"),
         F.sum("b").cast("double").alias("tot_neg"))
-    j = per_tok.crossJoin(F.broadcast(tot))
+    j = per_tok.crossJoin(tot)
     chi2 = ((F.col("tot_pos") + F.col("tot_neg"))
             * F.pow(F.col("a") * (F.col("tot_neg") - F.col("b"))
                     - F.col("b") * (F.col("tot_pos") - F.col("a")), 2)
@@ -6533,9 +6533,9 @@ def agg_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"))
     dfq = (tf.filter(F.col("tok").isin(*_BM25_TERMS))
            .groupBy("tok").agg(F.count(F.lit(1)).alias("df")))
-    per = (tf.join(F.broadcast(dfq), "tok")
+    per = (tf.join(dfq, "tok")
            .join(dl, "doc_id")
-           .crossJoin(F.broadcast(stats))
+           .crossJoin(stats)
            .select(
                "doc_id", "tok",
                F.least(F.col("tf"), F.lit(3)).alias("rel"),
@@ -6706,7 +6706,7 @@ def text_langid_confusion_eval(spark: SparkSession,
     tot = pred.groupBy("true_lang").agg(F.count(F.lit(1)).alias("n_true"))
     return (pred.groupBy("true_lang", "pred_lang")
             .agg(F.count(F.lit(1)).alias("n_docs"))
-            .join(F.broadcast(tot), "true_lang")
+            .join(tot, "true_lang")
             .select("true_lang", "pred_lang", "n_docs",
                     F.round(F.col("n_docs")
                             / F.col("n_true").cast("double"), 4)
@@ -7012,7 +7012,7 @@ def agg_auc_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("tp"),
         F.sum("neg_z").over(w.rowsBetween(Window.unboundedPreceding, 0))
         .alias("fp"))
-    pr = (cum.crossJoin(F.broadcast(tot))
+    pr = (cum.crossJoin(tot)
           .select(
               "z",
               (F.col("tp").cast("double")
@@ -7036,7 +7036,7 @@ def agg_auc_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.round(2 * F.col("prec") * F.col("rec")
                                / (F.col("prec") + F.col("rec")), 6))),
             6).alias("best_f1"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(F.col("p").cast("bigint").alias("n_pos"),
                 F.col("n").cast("bigint").alias("n_neg"),
                 "n_thresholds", "avg_precision", "best_f1"))
@@ -7100,7 +7100,7 @@ def pipeline_gopher_rules_funnel(spark: SparkSession,
     tot = ruled.agg(F.count(F.lit(1)).alias("n"))
     return (ruled.groupBy("verdict")
             .agg(F.count(F.lit(1)).alias("n_docs"))
-            .crossJoin(F.broadcast(tot))
+            .crossJoin(tot)
             .select("verdict", "n_docs",
                     F.round(F.col("n_docs") / F.col("n").cast("double"),
                             4).alias("share")))
@@ -7227,7 +7227,7 @@ def split_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (assigned.groupBy("fold", "lang")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("ntok").alias("n_tokens"))
-            .join(F.broadcast(tot), "lang")
+            .join(tot, "lang")
             .select("fold", "lang", "n_docs", "n_tokens",
                     F.round(F.col("n_docs")
                             / F.col("n_lang").cast("double"), 4)
@@ -7705,7 +7705,7 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot = F.aggregate(
         F.zip_with("qv", "cv", lambda a, b: a * b),
         F.lit(0.0), lambda acc, x: acc + x)
-    scored = (corpus.crossJoin(F.broadcast(queries))
+    scored = (corpus.crossJoin(queries)
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
                       F.round(dot, 6).alias("dot")))
@@ -7867,7 +7867,7 @@ def pipeline_active_learning_select(spark: SparkSession,
     before = ((F.col("b_a") < F.abs(F.col("margin")))
               | ((F.col("b_a") == F.abs(F.col("margin")))
                  & (F.col("b_id") <= F.col("doc_id"))))
-    return (top.join(F.broadcast(b), before)
+    return (top.join(b, before)
             .groupBy("doc_id", "true_lang", "margin")
             .agg(F.count(F.lit(1)).cast("int").alias("rnk"))
             .select("doc_id", "true_lang", "margin", "rnk"))
@@ -7934,8 +7934,8 @@ def text_source_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("ss").alias("ssa"))
     nb = norm.select(F.col("source").alias("src_b"),
                      F.col("ss").alias("ssb"))
-    return (dots.join(F.broadcast(na), "src_a")
-            .join(F.broadcast(nb), "src_b")
+    return (dots.join(na, "src_a")
+            .join(nb, "src_b")
             .select("src_a", "src_b",
                     F.round(F.col("dot")
                             / (F.sqrt(F.col("ssa"))
@@ -8619,7 +8619,7 @@ def pipeline_decontamination_eval(spark: SparkSession,
              .unionAll(planted.select("doc_id", "hs")))
     tr = train.select("doc_id", F.explode("hs").alias("h"))
     ev = heldout.select(F.explode("hs").alias("h")).distinct()
-    flagged = (tr.join(F.broadcast(ev), "h")
+    flagged = (tr.join(ev, "h")
                .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_hit")))
     is_planted = F.col("doc_id") >= 90000000
     agg = (flagged.agg(
@@ -8627,11 +8627,9 @@ def pipeline_decontamination_eval(spark: SparkSession,
         .alias("n_planted_flagged"),
         F.sum(F.when(~is_planted, 1).otherwise(0))
         .alias("n_organic_flagged"))
-        .crossJoin(F.broadcast(
-            planted.agg(F.count(F.lit(1)).alias("n_planted"))))
-        .crossJoin(F.broadcast(
-            sh.filter(F.col("b") < 8000)
-            .agg(F.count(F.lit(1)).alias("n_clean_train")))))
+        .crossJoin(planted.agg(F.count(F.lit(1)).alias("n_planted")))
+        .crossJoin(sh.filter(F.col("b") < 8000)
+                   .agg(F.count(F.lit(1)).alias("n_clean_train"))))
     return agg.select(
         F.col("n_planted").cast("bigint").alias("n_planted"),
         F.col("n_planted_flagged").cast("bigint")
@@ -8858,7 +8856,7 @@ def vocab_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = bg.agg(F.count(F.lit(1)).alias("nb"))
     return (bg.filter(F.col("c") >= 20)
             .join(c1, "w1").join(n1p, "w2")
-            .crossJoin(F.broadcast(tot))
+            .crossJoin(tot)
             .select("w1", "w2", F.col("c").cast("bigint").alias("c"),
                     F.round((F.col("c") - 0.75) / F.col("c1")
                             + 0.75 * F.col("n1f") / F.col("c1")
@@ -9106,7 +9104,7 @@ def sim_silhouette_simplified(spark: SparkSession,
              .select(F.col("vec_id").alias("cid"),
                      F.col("v").alias("cv")))
     dist = F.round(F.lit(1) - SIM.cosine(F.col("v"), F.col("cv")), 6)
-    scored = (emb.crossJoin(F.broadcast(cents))
+    scored = (emb.crossJoin(cents)
               .select("vec_id", "cid", dist.alias("dist")))
     a = (scored.groupBy("vec_id")
          .agg(F.min(F.struct("dist", "cid")).alias("k"))
@@ -9799,7 +9797,7 @@ def text_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = cxy.groupBy("b").agg(F.sum("k11").alias("c"))
     tot = cxy.agg(F.sum("k11").alias("nn"))
     scored = (cxy.join(ca, "a").join(cb, "b")
-              .crossJoin(F.broadcast(tot))
+              .crossJoin(tot)
               .withColumn("k12", F.col("r") - F.col("k11"))
               .withColumn("k21", F.col("c") - F.col("k11"))
               .withColumn("k22", F.col("nn") - F.col("r")
@@ -10177,7 +10175,7 @@ def sim_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = F.round(nd(1) + nd(2) + nd(3) + nd(4), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("maxsim_score"),
                                                "neighbor_id")
-    rk = (c.crossJoin(F.broadcast(q))
+    rk = (c.crossJoin(q)
           .select(F.col("qid").alias("query_id"),
                   F.col("cid").alias("neighbor_id"),
                   score.alias("maxsim_score"))
@@ -10279,7 +10277,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col(a), F.lit(0.0), lambda acc, v: acc + v * v))
     rel = F.round(dot("qv", "cv") / (nrm("qv") * nrm("cv")), 6)
     wq = Window.partitionBy("qid")
-    scored = (c.crossJoin(F.broadcast(q))
+    scored = (c.crossJoin(q)
               .select("qid", "cid", "cv", rel.alias("rel"))
               .withColumn("rk", F.row_number().over(
                   wq.orderBy(F.desc("rel"), "cid"))))
@@ -10676,7 +10674,7 @@ def text_gries_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias("nt"))
           .localCheckpoint(eager=True))
     tot = dl.agg(F.sum("nt").cast(dec).alias("nn"))
-    sd = (dl.crossJoin(F.broadcast(tot))
+    sd = (dl.crossJoin(tot)
           .select("doc_id",
                   F.round(F.col("nt").cast("double")
                           / F.col("nn").cast("double")
@@ -10687,7 +10685,7 @@ def text_gries_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
           .localCheckpoint(eager=True))
     top = (tf.groupBy("tok").agg(F.sum("f").cast(dec).alias("ft"))
            .orderBy(F.col("ft").desc(), "tok").limit(20))
-    pres = (tf.join(F.broadcast(top), "tok")
+    pres = (tf.join(top, "tok")
             .join(sd, "doc_id")
             .groupBy("tok", "ft")
             .agg(F.sum(F.abs(
@@ -10696,7 +10694,7 @@ def text_gries_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * 1000000000.0).cast(dec) - F.col("s")))
                 .alias("pa"),
                 F.sum("s").alias("ps")))
-    return (pres.crossJoin(F.broadcast(ts_))
+    return (pres.crossJoin(ts_)
             .select("tok",
                     F.col("ft").cast("bigint").alias("corpus_freq"),
                     F.round((F.col("pa") + (F.col("stot")
@@ -10853,8 +10851,8 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     # conditional-aggregate both curves at the 10 checkpoints in one
     # pass over each frame (thresholds are exact integer floors)
-    tokm = tc.crossJoin(F.broadcast(mx))
-    firstm = firsts.crossJoin(F.broadcast(mx))
+    tokm = tc.crossJoin(mx)
+    firstm = firsts.crossJoin(mx)
     # integer `div`, matching the oracle's HUGEINT floor-division
     # exactly at ANY corpus size (r8 ADVICE #1: the old
     # (md*t - md*t%10)/10 detoured through double division, exact
@@ -10867,7 +10865,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vpass = firstm.agg(*[
         F.sum(F.when(F.col("fd") < thr(t), 1).otherwise(0))
         .cast(dec).alias(f"v{t}") for t in range(1, 11)])
-    both = npass.crossJoin(F.broadcast(vpass))
+    both = npass.crossJoin(vpass)
     pts = both.select(F.array(*[
         F.struct(F.col(f"n{t}").alias("n"), F.col(f"v{t}").alias("v"))
         for t in range(1, 11)]).alias("a"))
@@ -10939,7 +10937,7 @@ def vocab_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("nr").alias("nrn"))
     out = (coc.orderBy("r").limit(12)
            .join(b, F.col("r") == F.col("rb"), "left")
-           .crossJoin(F.broadcast(tot)))
+           .crossJoin(tot))
     nrn = F.coalesce(F.col("nrn"), F.lit(0)).cast(dec)
     return (out.select(
         F.col("r").cast("bigint").alias("r"),
@@ -11033,9 +11031,9 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     top30 = (base.groupBy("tok").agg(F.sum("c0").alias("n"))
              .orderBy(F.col("n").desc(), F.col("tok").asc())
              .limit(30).select("tok"))
-    cnts = (base.join(F.broadcast(top30), "tok")
+    cnts = (base.join(top30, "tok")
             .select("source", "tok", F.col("c0").cast(dec).alias("c")))
-    grid = stot.crossJoin(F.broadcast(top30))
+    grid = stot.crossJoin(top30)
     q = (grid.join(cnts, ["source", "tok"], "left")
          .select("source", "tok",
                  F.round(F.coalesce(F.col("c"), F.lit(0))
@@ -11148,7 +11146,7 @@ def sim_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     offs = spark.range(0, 9).select(
         (F.col("id") % 3 - 1).alias("dx"),
         (F.floor(F.col("id") / 3) - 1).alias("dy"))
-    ex = (cells.crossJoin(F.broadcast(offs))
+    ex = (cells.crossJoin(offs)
           .select(F.col("vec_id").alias("s"),
                   F.col("x").alias("xs"), F.col("y").alias("ys"),
                   (F.col("cx") + F.col("dx")).alias("gcx"),

@@ -153,7 +153,7 @@ def slice_between_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _log_df(spark)
     marks = (log.filter(F.col("line").contains("Luigi Execution Summary"))
              .agg(F.min("lineno").alias("lo"), F.max("lineno").alias("hi")))
-    return (log.crossJoin(F.broadcast(marks))
+    return (log.crossJoin(marks)
             .filter((F.col("lineno") > F.col("lo"))
                     & (F.col("lineno") < F.col("hi")))
             .select("lineno", "line"))

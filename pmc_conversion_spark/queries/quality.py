@@ -143,9 +143,10 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Real pipelines decode sparse coded columns where "missing" is
     itself a category (codebook rows for unknown codes — cf.
     ``join_codebook_decode``); an equi-join drops those rows, a
-    null-safe join routes them to the missing bucket. Plan: the 2-row
-    dim broadcasts, the fact side never shuffles, and eqNullSafe still
-    qualifies as a broadcast-hash-join key (no fallback to BNLJ).
+    null-safe join routes them to the missing bucket. Plan: the planner
+    broadcasts the 2-row dim (under ``autoBroadcastJoinThreshold``), the
+    fact side never shuffles, and eqNullSafe still qualifies as a
+    broadcast-hash-join key (no fallback to BNLJ).
     """
     o = (_t(spark, sf_dir, "orders")
          .select(F.nullif(F.col("o_orderstatus"), F.lit("O")).alias("k")))
@@ -154,7 +155,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, [(None, "open-missing"), ("F", "final")],
         StructType([StructField("k", StringType()),
                     StructField("label", StringType())]))
-    return (o.join(F.broadcast(dim), o["k"].eqNullSafe(dim["k"]))
+    return (o.join(dim, o["k"].eqNullSafe(dim["k"]))
              .groupBy("label").agg(F.count(F.lit(1)).alias("n")))
 
 
@@ -188,7 +189,7 @@ def agg_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
                .alias("grp")))
     tot = g.agg(F.sum("grp").alias("tot"))
-    return (g.crossJoin(F.broadcast(tot))
+    return (g.crossJoin(tot)
              .select("o_orderpriority",
                      F.col("grp").cast("double").alias("group_total"),
                      F.round(F.col("grp").cast("double")
@@ -872,7 +873,7 @@ def dq_simpsons_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     friendly); the dim join broadcasts."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    j = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+    j = (o.join(c, o.o_custkey == c.c_custkey)
          .select(F.when(F.col("o_orderkey") % 2 == 0, "A").otherwise("B")
                  .alias("arm"),
                  F.col("c_mktsegment").alias("stratum"),
@@ -1066,7 +1067,7 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("k"))
     tot = quasi.agg(F.count(F.lit(1)).alias("n_rows"))
     small = F.when(F.col("k") < 5, F.col("k")).otherwise(0)
-    return (groups.crossJoin(F.broadcast(tot))
+    return (groups.crossJoin(tot)
             .groupBy("n_rows")
             .agg(F.min("k").cast("bigint").alias("k_anonymity"),
                  F.count(F.lit(1)).alias("n_classes"),
@@ -1216,12 +1217,13 @@ def dq_fk_coverage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     star schema audited in one report (child rows, orphan rows) — the
     sweep a warehouse runs nightly, where join_anti_orphans is the
     single-edge drill-down. Each edge is one LEFT ANTI join counting
-    unmatched children; dimension sides broadcast, so the whole
-    matrix costs one pass per fact table. All-zero orphans is the
+    unmatched children; the planner broadcasts dimension sides under
+    ``autoBroadcastJoinThreshold``, so the matrix costs one pass per
+    fact table. All-zero orphans is the
     pass state; any nonzero names exactly which edge broke
     ingestion."""
     def audit(child, ckey, parent, pkey, label):
-        orphans = child.join(F.broadcast(parent),
+        orphans = child.join(parent,
                              child[ckey] == parent[pkey], "left_anti")
         return (child.agg(F.count(F.lit(1)).alias("n_child"))
                 .crossJoin(orphans.agg(F.count(F.lit(1))
@@ -1306,7 +1308,7 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = (a.agg(F.sum("na_k").alias("na"))
            .crossJoin(b.agg(F.sum("nb_k").alias("nb"))))
     terms = (a.join(b, "k", "full_outer")
-             .crossJoin(F.broadcast(tot))
+             .crossJoin(tot)
              .select(
                  "k",
                  F.greatest(F.coalesce("na_k", F.lit(0))
@@ -1381,7 +1383,7 @@ def dq_hash_collision_audit(spark: SparkSession,
                 F.count(F.lit(1)).alias("used_buckets"),
                 F.sum(F.col("n") * (F.col("n") - 1) / 2).cast("bigint")
                 .alias("pairs"))
-    j = per.crossJoin(F.broadcast(t))
+    j = per.crossJoin(t)
     exp = F.col("total") / 4096.0
     term = F.pow(F.col("n") - exp, 2) / exp
     folded = j.groupBy("total", "used_buckets", "pairs").agg(
@@ -1670,9 +1672,9 @@ def dq_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
     alarm = (ph.filter(F.col("pht") > 50000000)
              .agg(F.min("d").alias("alarm_day")))
-    return (ph.join(F.broadcast(mx), F.col("pht") == F.col("max_ph"))
+    return (ph.join(mx, F.col("pht") == F.col("max_ph"))
             .groupBy("max_ph").agg(F.min("d").alias("peak_day"))
-            .crossJoin(F.broadcast(nd)).crossJoin(F.broadcast(alarm))
+            .crossJoin(nd).crossJoin(alarm)
             .select("n_days",
                     F.col("max_ph").cast("double").alias("max_ph"),
                     "peak_day", "alarm_day"))
@@ -1871,7 +1873,7 @@ def dq_slice_finder(spark: SparkSession, sf_dir: str) -> DataFrame:
         slices = slices.unionAll(pp)
     p0 = F.col("rr").cast("double") / F.col("nn")
     z = (slices.filter(F.col("n") >= 100)
-         .crossJoin(F.broadcast(tot))
+         .crossJoin(tot)
          .select("dim1", "val1", "dim2", "val2",
                  F.col("n").cast("bigint").alias("n"),
                  F.round(F.col("r").cast("double") / F.col("n"), 6)
@@ -1935,8 +1937,8 @@ def dq_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = (c1.join(c2, "o_custkey", "leftsemi")
          .agg(F.count(F.lit(1)).alias("m")))
     truth = o.agg(F.countDistinct("o_custkey").alias("truth"))
-    s = (n1.crossJoin(F.broadcast(n2)).crossJoin(F.broadcast(m))
-         .crossJoin(F.broadcast(truth)))
+    s = (n1.crossJoin(n2).crossJoin(m)
+         .crossJoin(truth))
     chap = ((F.col("n1") + 1).cast("double") * (F.col("n2") + 1)
             / (F.col("m") + 1) - 1.0)
     return s.select(

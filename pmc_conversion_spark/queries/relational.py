@@ -72,15 +72,15 @@ def filter_nonnull_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     """)
 def join_fk_individual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FK equi-join fact->dimension with the dimension broadcast.
+    """FK equi-join fact->dimension.
 
     Reference: Diagnosis/Biosource/Radiology reference individual_id
-    (biosource.tsv:1). Customer plays the bounded dimension; broadcast
-    avoids shuffling the fact side at any scale.
+    (biosource.tsv:1). The planner broadcasts customer while it is under
+    ``autoBroadcastJoinThreshold``, and shuffles both sides above it.
     """
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
-    return (orders.join(F.broadcast(customer),
+    return (orders.join(customer,
                         orders.o_custkey == customer.c_custkey)
             .select("o_orderkey", "c_custkey", "c_mktsegment"))
 
@@ -126,7 +126,7 @@ def join_fk_transitive(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     return (l.join(o, l.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+            .join(c, o.o_custkey == c.c_custkey)
             .select("l_orderkey", "l_linenumber", "c_custkey", "c_nationkey"))
 
 
@@ -245,7 +245,7 @@ def join_bridge_m2n(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     l = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
-    return (l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+    return (l.join(s, l.l_suppkey == s.s_suppkey)
             .join(o, l.l_orderkey == o.o_orderkey)
             .groupBy("s_suppkey", "s_name")
             .agg(F.countDistinct("o_custkey").alias("n_customers")))
@@ -949,7 +949,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     bounds = o.agg(F.min("o_totalprice").alias("mn"),
                    F.max("o_totalprice").alias("mx"))
-    return (o.crossJoin(F.broadcast(bounds))
+    return (o.crossJoin(bounds)
             .select(F.least(
                 F.floor((F.col("o_totalprice") - F.col("mn"))
                         / (F.col("mx") - F.col("mn")) * 10),
@@ -1249,7 +1249,7 @@ def agg_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting list."""
     n = tables.load(spark, sf_dir, "nation")
     r = tables.load(spark, sf_dir, "region")
-    return (n.join(F.broadcast(r),
+    return (n.join(r,
                    n.n_regionkey == r.r_regionkey)
             .groupBy(F.col("r_name").alias("region"))
             .agg(F.array_join(F.sort_array(F.collect_list("n_name")), ",")
@@ -1373,7 +1373,7 @@ def sql_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_c = (o.select("o_custkey", "o_orderpriority").distinct()
              .groupBy("o_custkey")
              .agg(F.count(F.lit(1)).alias("n_mine")))
-    return (per_c.crossJoin(F.broadcast(total))
+    return (per_c.crossJoin(total)
             .filter(F.col("n_mine") == F.col("n_total"))
             .select(F.col("o_custkey").alias("c_custkey")))
 
@@ -1451,7 +1451,7 @@ def dq_dataset_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ta = a.agg(F.sum("n_before").alias("ta"))
     tb = b.agg(F.sum("n_after").alias("tb"))
     j = (a.join(b, "k", "full")
-         .crossJoin(F.broadcast(ta)).crossJoin(F.broadcast(tb))
+         .crossJoin(ta).crossJoin(tb)
          .select(F.col("k").alias("o_orderpriority"),
                  F.coalesce("n_before", F.lit(0)).alias("n_before"),
                  F.coalesce("n_after", F.lit(0)).alias("n_after"),
@@ -1531,8 +1531,8 @@ def agg_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey")
     n = tables.load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name")
-    cust = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
+    cust = (o.join(c, o.o_custkey == c.c_custkey)
+            .join(n, F.col("c_nationkey") == n.n_nationkey)
             .groupBy(F.col("n_name").alias("nation"), "o_custkey")
             .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
                  .alias("cents")))
@@ -1716,10 +1716,10 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding,
                                           Window.currentRow)
     c = (b.withColumn("cum", F.sum("n").over(w))
-         .crossJoin(F.broadcast(b.agg(F.sum("n").alias("total")))))
+         .crossJoin(b.agg(F.sum("n").alias("total"))))
     qs = spark.range(1).select(
         F.explode(F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))).alias("q"))
-    hit = (F.broadcast(qs).join(c, F.col("cum") >= F.col("q") * F.col("total"))
+    hit = (qs.join(c, F.col("cum") >= F.col("q") * F.col("total"))
            .groupBy("q").agg(F.min("bin").alias("bin")))
     est = (hit.join(c, "bin")
            .select("q",
@@ -2067,7 +2067,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count(F.lit(1)).alias("frequency"),
                  F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)"))
                  .cast("double").alias("monetary"))
-            .crossJoin(F.broadcast(mx))
+            .crossJoin(mx)
             .withColumn("recency_days",
                         F.datediff(F.col("maxd").cast("date"),
                                    F.col("lastd").cast("date"))))
@@ -2122,7 +2122,7 @@ def agg_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.count(F.lit(1)).alias("n"),
               F.sum("p").cast("double").alias("revenue")))
     t = g.agg(F.sum("n").alias("tn"), F.sum("revenue").alias("tr"))
-    return (g.crossJoin(F.broadcast(t))
+    return (g.crossJoin(t)
             .select("iso_dow", "n",
                     F.round("revenue", 2).alias("revenue"),
                     F.round(F.col("n").cast("double") / F.col("tn") * 7, 4)
@@ -2179,9 +2179,9 @@ def agg_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("s").alias("sa"))
     sb = singles.select(F.col("l_partkey").alias("part_b"),
                         F.col("s").alias("sb"))
-    return (pairs.join(F.broadcast(sa), "part_a")
-            .join(F.broadcast(sb), "part_b")
-            .crossJoin(F.broadcast(n_orders))
+    return (pairs.join(sa, "part_a")
+            .join(sb, "part_b")
+            .crossJoin(n_orders)
             .select("part_a", "part_b", "ab",
                     F.round(F.col("ab").cast("double") * F.col("n")
                             / (F.col("sa") * F.col("sb")), 4).alias("lift"))
@@ -2360,8 +2360,8 @@ def win_rank_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tables.load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name")
     rev = (o.filter(F.year("o_orderdate").isin(1996, 1997))
-           .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-           .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
+           .join(c, o.o_custkey == c.c_custkey)
+           .join(n, F.col("c_nationkey") == n.n_nationkey)
            .groupBy(F.col("n_name").alias("nation"),
                     F.year("o_orderdate").alias("yr"))
            .agg(F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)"))
@@ -2420,7 +2420,7 @@ def agg_seasonal_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     yearly = (m.groupBy("yr")
               .agg((F.sum("r").cast("double") / F.count(F.lit(1)))
                    .alias("monthly_avg")))
-    factors = (m.join(F.broadcast(yearly), "yr")
+    factors = (m.join(yearly, "yr")
                .select("mo", (F.col("r").cast("double")
                               / F.col("monthly_avg")).alias("f")))
     return (factors.groupBy(F.col("mo").alias("month"))
@@ -2529,7 +2529,7 @@ def agg_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (Window.partitionBy("cohort_m").orderBy("age_m")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (rev.withColumn("cum", F.sum("r").over(w))
-            .join(F.broadcast(sized), "cohort_m")
+            .join(sized, "cohort_m")
             .filter(F.col("age_m") <= 12)
             .select("cohort_m", "age_m",
                     F.round(F.col("cum").cast("double")
@@ -2573,8 +2573,8 @@ def agg_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_name")
     t_idx = ((F.year("o_orderdate") - 1995) * 12
              + F.month("o_orderdate") - 1)
-    m = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
+    m = (o.join(c, o.o_custkey == c.c_custkey)
+         .join(n, F.col("c_nationkey") == n.n_nationkey)
          .groupBy(F.col("n_name").alias("nation"), t_idx.alias("t"))
          .agg(F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)"))
               .cast("double").alias("y")))
@@ -2624,7 +2624,7 @@ def agg_reorder_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cp = (l.join(o, l.l_orderkey == o.o_orderkey)
           .groupBy("o_custkey", "l_partkey")
           .agg(F.countDistinct("l_orderkey").alias("n_orders")))
-    typed = cp.join(F.broadcast(p), cp.l_partkey == p.p_partkey)
+    typed = cp.join(p, cp.l_partkey == p.p_partkey)
     return (typed.groupBy("p_type")
             .agg(F.count(F.lit(1)).alias("n_cust_part_pairs"),
                  F.sum(F.when(F.col("n_orders") >= 2, 1).otherwise(0))
@@ -2702,8 +2702,8 @@ def win_percent_of_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey")
     n = tables.load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name")
-    m = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
+    m = (o.join(c, o.o_custkey == c.c_custkey)
+         .join(n, F.col("c_nationkey") == n.n_nationkey)
          .groupBy(F.col("n_name").alias("nation"),
                   (F.year("o_orderdate") * 100
                    + F.month("o_orderdate")).alias("ym"))
@@ -2924,7 +2924,7 @@ def agg_half_sample_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.round("o_totalprice", 2)
         .cast("decimal(18,2)").alias("p"))
     reps = spark.range(10).select(F.col("id").alias("r"))
-    member = (o.crossJoin(F.broadcast(reps))
+    member = (o.crossJoin(reps)
               .filter(md5_int60(
                   F.concat(F.col("r").cast("string"), F.lit(":"),
                            F.col("o_orderkey").cast("string"))) % 2 == 0))
@@ -3150,10 +3150,10 @@ def cdc_diff_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_role_playing_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Role-playing dimension: ONE calendar dim joined twice under two
     roles (ship date, receipt date) — the star-schema idiom that keeps
-    a single conformed calendar instead of N date copies. Both roles
-    broadcast the same small dim; Catalyst reuses the broadcast
-    exchange across the two joins (one build, two probes), which is
-    the plan-level payoff of conforming the dimension."""
+    a single conformed calendar instead of N date copies. While the dim
+    is under ``autoBroadcastJoinThreshold`` both roles broadcast it, and
+    Catalyst reuses the broadcast exchange across the two joins (one
+    build, two probes): the plan-level payoff of conforming the dim."""
     o = tables.load(spark, sf_dir, "orders")
     li = (tables.load(spark, sf_dir, "lineitem")
           .filter(F.col("l_orderkey") % 5 == 0)
@@ -3169,8 +3169,8 @@ def join_role_playing_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = cal.select(F.col("d").alias("ord_d"),
                    F.col("y").alias("ord_year"),
                    F.col("q").alias("ord_quarter"))
-    return (li.join(F.broadcast(s), "ship_d")
-            .join(F.broadcast(r), "ord_d")
+    return (li.join(s, "ship_d")
+            .join(r, "ord_d")
             .groupBy("ship_year", "ship_quarter",
                      "ord_year", "ord_quarter")
             .agg(F.count(F.lit(1)).alias("n")))
@@ -3302,7 +3302,7 @@ def join_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = tables.load(spark, sf_dir, "customer")
     onhand = (cust.filter(F.col("c_custkey") % 10 != 7)
               .select("c_custkey", "c_mktsegment"))
-    initial = (o.join(F.broadcast(onhand),
+    initial = (o.join(onhand,
                       o.o_custkey == onhand.c_custkey, "left")
                .select("o_orderkey", "o_custkey",
                        F.coalesce("c_mktsegment", F.lit("UNKNOWN"))
@@ -3311,7 +3311,7 @@ def join_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .alias("p")))
     backfill = (initial.filter(F.col("segment") == "UNKNOWN")
                 .drop("segment")
-                .join(F.broadcast(cust.select("c_custkey", "c_mktsegment")),
+                .join(cust.select("c_custkey", "c_mktsegment"),
                       F.col("o_custkey") == F.col("c_custkey"))
                 .select("o_orderkey",
                         F.col("c_mktsegment").alias("segment"), "p"))
@@ -3908,7 +3908,7 @@ def agg_trimmed_robust_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.col("cents"))).alias("p_lo"),
                  F.max(F.when(F.col("rn") == F.col("k") - F.col("lo"),
                               F.col("cents"))).alias("p_hi")))
-    j = b.join(F.broadcast(cuts), "grp")
+    j = b.join(cuts, "grp")
     in_trim = (F.col("rn") > F.col("lo")) & (F.col("rn")
                                              <= F.col("k") - F.col("lo"))
     clamped = F.least(F.greatest(F.col("cents"), F.col("p_lo")),
@@ -4179,7 +4179,7 @@ def agg_rate_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot."""
     o = tables.load(spark, sf_dir, "orders")
     c = tables.load(spark, sf_dir, "customer")
-    j = (o.join(F.broadcast(c.select("c_custkey", "c_mktsegment")),
+    j = (o.join(c.select("c_custkey", "c_mktsegment"),
                 o.o_custkey == F.col("c_custkey"))
          .select(F.col("c_mktsegment").alias("seg"),
                  F.year("o_orderdate").alias("yr"),
@@ -4337,7 +4337,7 @@ def agg_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .otherwise(0).alias("sg")))
     n_df = daily.agg(F.count(F.lit(1)).alias("n"))
     s_df = pairs.agg(F.sum("sg").cast("bigint").alias("s"))
-    j = s_df.crossJoin(F.broadcast(n_df))
+    j = s_df.crossJoin(n_df)
     corr = (F.when(F.col("s") > 0, 1)
             .when(F.col("s") < 0, -1).otherwise(0))
     z = ((F.col("s") - corr)
@@ -4800,7 +4800,7 @@ def agg_bayes_shrunk_means(spark: SparkSession,
     o = tables.load(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 97 == 0)
     c = tables.load(spark, sf_dir, "customer")
-    g = (o.join(F.broadcast(c.select("c_custkey", "c_nationkey")),
+    g = (o.join(c.select("c_custkey", "c_nationkey"),
                 o.o_custkey == F.col("c_custkey"))
          .groupBy(F.col("c_nationkey").alias("nat"))
          .agg(F.count(F.lit(1)).alias("n"),
@@ -4808,7 +4808,7 @@ def agg_bayes_shrunk_means(spark: SparkSession,
                     .cast("bigint")).cast("bigint").alias("cents")))
     t = g.agg(F.sum("cents").cast("bigint").alias("tc"),
               F.sum("n").cast("bigint").alias("tn"))
-    j = g.crossJoin(F.broadcast(t))
+    j = g.crossJoin(t)
     gmean = F.col("tc").cast("double") / F.col("tn")
     return j.select(
         "nat", F.col("n").alias("n_obs"),
@@ -5001,7 +5001,7 @@ def agg_exact_kth_element(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = W.surrogate_key_distributed(
         v, F.struct("cents", "okey"), out_col="rnk")
     tot = v.agg(F.count(F.lit(1)).alias("n"))
-    return (ranked.crossJoin(F.broadcast(tot))
+    return (ranked.crossJoin(tot)
             .filter((F.col("rnk") == 100)
                     | (F.col("rnk") == F.expr("(n + 1) div 2")))
             .select(F.when(F.col("rnk") == 100, "k100")
@@ -5335,7 +5335,7 @@ def agg_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tables.load(spark, sf_dir, "lineitem")
     p = tables.load(spark, sf_dir, "part")
     v = (li.filter(F.col("l_quantity") > 0)
-         .join(F.broadcast(p.select("p_partkey", "p_brand")),
+         .join(p.select("p_partkey", "p_brand"),
                li.l_partkey == F.col("p_partkey"))
          .select(F.col("p_brand").alias("brand"),
                  F.log(F.col("l_extendedprice") / F.col("l_quantity"))
@@ -5490,7 +5490,7 @@ def agg_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     se = F.sqrt(F.col("msw") / 2
                 * (1.0 / F.col("n_a") + 1.0 / F.col("n_b")))
     return (a.join(b, F.col("grp_a") < F.col("grp_b"))
-            .crossJoin(F.broadcast(pool))
+            .crossJoin(pool)
             .select("grp_a", "grp_b",
                     F.col("n_a").cast("bigint").alias("n_a"),
                     F.col("n_b").cast("bigint").alias("n_b"),
@@ -5581,13 +5581,13 @@ def agg_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tables.load(spark, sf_dir, "nation")
     g = (li.join(o, o.o_orderkey == li.l_orderkey)
          .join(c, c.c_custkey == o.o_custkey)
-         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
+         .join(n, n.n_nationkey == c.c_nationkey)
          .groupBy(F.col("n_name").alias("nation"))
          .agg(F.count(F.lit(1)).alias("n"),
               F.sum(F.when(F.col("l_returnflag") == "R", 1)
                     .otherwise(0)).alias("x")))
     tot = g.agg((F.sum("x") / F.sum("n").cast("double")).alias("p0"))
-    z = (g.crossJoin(F.broadcast(tot))
+    z = (g.crossJoin(tot)
          .select("nation", "n",
                  ((F.col("x") / F.col("n").cast("double") - F.col("p0"))
                   / F.sqrt(F.col("p0") * (1 - F.col("p0"))
@@ -5747,7 +5747,7 @@ def agg_eb_beta_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfac = F.col("m") * (1 - F.col("m")) / F.col("v") - 1
     ab = fit.select("m", "v", (F.col("m") * cfac).alias("alpha"),
                     ((1 - F.col("m")) * cfac).alias("beta"))
-    j = cr.crossJoin(F.broadcast(ab))
+    j = cr.crossJoin(ab)
     return (j.groupBy("seg")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_customers"),
                  F.round(F.first("alpha"), 6).alias("alpha"),
@@ -6212,7 +6212,7 @@ def agg_causal_cem(spark: SparkSession, sf_dir: str) -> DataFrame:
     alltot = s.agg(F.sum("n1").alias("all1"))
     matched = s.filter((F.col("n1") > 0) & (F.col("n0") > 0))
     tot = matched.agg(F.sum("n1").alias("m1"))
-    j = matched.crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(alltot))
+    j = matched.crossJoin(tot).crossJoin(alltot)
     att = F.sum((F.col("n1") / F.col("m1").cast("double"))
                 * (F.col("y1") / F.col("n1") - F.col("y0") / F.col("n0")))
     return j.agg(
@@ -6486,7 +6486,7 @@ def agg_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tables.load(spark, sf_dir, "nation")
     g = (li.join(o, o.o_orderkey == li.l_orderkey)
          .join(c, c.c_custkey == o.o_custkey)
-         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
+         .join(n, n.n_nationkey == c.c_nationkey)
          .groupBy(F.col("n_name").alias("nation"))
          .agg(F.count(F.lit(1)).alias("n"),
               F.sum(F.when(F.col("l_returnflag") == "R", 1)
@@ -6494,7 +6494,7 @@ def agg_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = g.agg((F.sum("x") / F.sum("n").cast("double")).alias("p0"))
     z = ((F.col("x") / F.col("n").cast("double") - F.col("p0"))
          / F.sqrt(F.col("p0") * (1 - F.col("p0")) / F.col("n")))
-    p = (g.crossJoin(F.broadcast(tot))
+    p = (g.crossJoin(tot)
          .withColumn("zc", z)
          .withColumn("pval", F.expr(_phi_2sided_sql("zc"))))
     r = (p.select("nation", "pval")
@@ -6741,7 +6741,7 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.col("n")
     h = (F.lit(3.0) * F.col("ss") / (n.cast("double") * (n + 1))
          - F.lit(3.0) * (n + 1))
-    return (tot.crossJoin(F.broadcast(ties))
+    return (tot.crossJoin(ties)
             .select(n.cast("bigint").alias("n"), "k_groups",
                     (F.col("k_groups") - 1).alias("df"),
                     F.round(h, 4).alias("h_stat"),
@@ -6806,7 +6806,7 @@ def agg_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .cast("bigint")).cast("bigint").alias("val")))
     kk = cell.agg(F.countDistinct("g").alias("k"))
     full_b = (cell.groupBy("b").agg(F.count(F.lit(1)).alias("nt"))
-              .join(F.broadcast(kk), F.col("nt") == F.col("k"))
+              .join(kk, F.col("nt") == F.col("k"))
               .select("b"))
     w_le = (Window.partitionBy("b").orderBy("val")
             .rangeBetween(Window.unboundedPreceding, 0))
@@ -6887,7 +6887,7 @@ def agg_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("c").alias("ca"))
     b = h.select(F.col("q").alias("qb"), F.col("d").alias("db"),
                  F.col("c").alias("cb"))
-    pairs = (a.join(F.broadcast(b), F.col("qb") > F.col("qa"))
+    pairs = (a.join(b, F.col("qb") > F.col("qa"))
              .agg(F.sum(F.when(F.col("db") > F.col("da"),
                                F.col("ca") * F.col("cb"))
                         .otherwise(0)).alias("conc"),
@@ -6903,8 +6903,8 @@ def agg_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
                .cast("bigint").alias("t2")))
     n = F.col("n")
     n0 = n.cast("double") * (n - 1) / 2
-    return (pairs.crossJoin(F.broadcast(m)).crossJoin(F.broadcast(tq))
-            .crossJoin(F.broadcast(td))
+    return (pairs.crossJoin(m).crossJoin(tq)
+            .crossJoin(td)
             .select(n.cast("bigint").alias("n"),
                     F.col("conc").cast("bigint").alias("concordant"),
                     F.col("disc").cast("bigint").alias("discordant"),
@@ -7080,7 +7080,7 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .cast("long").alias("xc"))
     m = c.agg(F.count(F.lit(1)).alias("n"), F.sum("xc").alias("s"))
     mu = m.select("n", F.expr("s DIV n").alias("mu"))
-    d = (c.crossJoin(F.broadcast(mu))
+    d = (c.crossJoin(mu)
          .select((F.col("xc") - F.col("mu"))
                  .cast("decimal(19,0)").alias("d")))
     dd = F.col("d")
@@ -7088,7 +7088,7 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.sum(dd * dd).alias("s2"),
               F.sum(dd * dd * dd).alias("s3"),
               F.sum(dd * dd * dd * dd).alias("s4"))
-    alg = (s.crossJoin(F.broadcast(mu.select("n")))
+    alg = (s.crossJoin(mu.select("n"))
            .select(F.col("n"),
                    F.col("n").cast("double").alias("nd"),
                    (F.col("s1").cast("double") / F.col("n")).alias("dl"),
@@ -7309,7 +7309,7 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         points=[F.col("r"), F.col("n") - F.col("r"), F.col("c"),
                 F.col("n") - F.col("c"), F.col("n")])
-    ks = (lf.crossJoin(F.broadcast(m))
+    ks = (lf.crossJoin(m)
           .filter((F.col("i") >= F.col("a"))
                   & (F.col("i") <= F.least(F.col("r"), F.col("c"))))
           .select(F.col("i").alias("k"), F.col("lf").alias("lfk"),
@@ -7328,7 +7328,7 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .drop(f"__i_{suffix}", f"__k_{suffix}")
                 .withColumn(f"lf_{suffix}",
                             F.coalesce(F.col(f"lf_{suffix}"), F.lit(0.0))))
-    cst = (lf.crossJoin(F.broadcast(m)).agg(
+    cst = (lf.crossJoin(m).agg(
         F.max(F.when(F.col("i") == F.col("r"), F.col("lf"))).alias("lf_r"),
         F.max(F.when(F.col("i") == F.col("n") - F.col("r"),
                      F.col("lf"))).alias("lf_nr"),
@@ -7339,13 +7339,13 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     lt_col = ((F.col("lf_r") - F.col("lfk") - F.col("lf_rk"))
               + (F.col("lf_nr") - F.col("lf_ck") - F.col("lf_nk"))
               - (F.col("lf_n") - F.col("lf_c") - F.col("lf_nc")))
-    lt = (term.crossJoin(F.broadcast(cst))
+    lt = (term.crossJoin(cst)
           .select("k", "a", lt_col.alias("lt")))
     agg = lt.agg(
         F.sum(F.exp(F.col("lt"))).alias("p_upper"),
         F.max(F.when(F.col("k") == F.col("a"), F.col("lt")))
         .alias("lt_obs"))
-    return (m.crossJoin(F.broadcast(agg))
+    return (m.crossJoin(agg)
             .select(F.col("a").cast("bigint").alias("a_count"),
                     F.col("r").cast("bigint").alias("r_margin"),
                     F.col("c").cast("bigint").alias("c_margin"),
@@ -7627,8 +7627,8 @@ def agg_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = F.col("o_orderpriority") == "1-URGENT"
     out = F.col("o_orderstatus") == "F"
     st = (o.join(cu, o["o_custkey"] == cu["c_custkey"])
-          .join(F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"])
-          .join(F.broadcast(r), na["n_regionkey"] == r["r_regionkey"])
+          .join(na, cu["c_nationkey"] == na["n_nationkey"])
+          .join(r, na["n_regionkey"] == r["r_regionkey"])
           .groupBy(F.col("r_name").alias("stratum"))
           .agg(F.sum(F.when(ex & out, 1).otherwise(0)).alias("a"),
                F.sum(F.when(ex & ~out, 1).otherwise(0)).alias("b"),
@@ -8101,7 +8101,7 @@ def agg_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.sum("xc").alias("s"),
               F.sum(F.col("xc").cast("decimal(38,0)") * F.col("xc"))
               .alias("q"))
-    d = (c.crossJoin(F.broadcast(m))
+    d = (c.crossJoin(m)
          .select(F.abs(F.col("n").cast("decimal(38,0)") * F.col("xc")
                        - F.col("s")).alias("dev"),
                  "xc", "n", "s", "q"))
@@ -8439,7 +8439,7 @@ def agg_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = b.agg(
         F.sum("nb").cast("double").alias("n"),
         (F.sum("yb").cast("double") / F.sum("nb")).alias("ybar"))
-    j = b.crossJoin(F.broadcast(tot))
+    j = b.crossJoin(tot)
     ybm = F.col("yb").cast("double") / F.col("nb")
     ybar = F.col("ybar")
     parts = j.agg(
@@ -8595,7 +8595,7 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("pos"), F.col("avgrank"))
               .otherwise(0.0)).alias("wplus"))
-    j = s.crossJoin(F.broadcast(ties))
+    j = s.crossJoin(ties)
     n = F.col("n")
     sig = F.sqrt(n * (n + F.lit(1.0)) * (2 * n + 1) / 24.0
                  - F.col("tsum") / 48.0)
@@ -8870,7 +8870,7 @@ def agg_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
          / (F.col("n") * F.col("stt")
             - dec("st") * F.col("st")).cast("double"))
     coef = s.select("n", b.alias("b"), "st", "sy")
-    resid = (td.crossJoin(F.broadcast(coef))
+    resid = (td.crossJoin(coef)
              .select("d",
                      (F.col("y").cast("double")
                       - (F.col("sy").cast("double")
@@ -8884,8 +8884,8 @@ def agg_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("de").isNull(), 0.0)
               .otherwise(F.col("de") * F.col("de"))).alias("num"),
         F.sum(F.col("e") * F.col("e")).alias("den"))
-    out = agg.crossJoin(F.broadcast(coef.select(
-        F.round(F.col("b") / 100.0, 6).alias("slope_dollars_per_day"))))
+    out = agg.crossJoin(coef.select(
+        F.round(F.col("b") / 100.0, 6).alias("slope_dollars_per_day")))
     return out.select(
         F.col("n").cast("bigint").alias("n_days"),
         "slope_dollars_per_day",
@@ -9137,7 +9137,7 @@ def agg_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("xc"), "o_orderkey").limit(1001)
             .select("xc"))
     mn = topk.agg(F.min("xc").alias("xmin"))
-    j = topk.crossJoin(F.broadcast(mn))
+    j = topk.crossJoin(mn)
     return j.agg(
         F.lit(1000).alias("hill_k"),
         F.round(F.max("xmin") / 100.0, 2).alias("xmin_dollars"),
@@ -9207,15 +9207,15 @@ def agg_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .alias("yhat"),
                   F.count(F.lit(1)).alias("n_train")))
     cal = (base.filter(F.col("fold") == 1)
-           .join(F.broadcast(model), "grp")
+           .join(model, "grp")
            .select(F.abs(F.col("y") - F.col("yhat")).alias("s")))
     q = cal.agg(
         F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY s)")
         .alias("qhat"),
         F.count(F.lit(1)).alias("n_cal"))
     test = (base.filter(F.col("fold") == 2)
-            .join(F.broadcast(model), "grp")
-            .crossJoin(F.broadcast(q))
+            .join(model, "grp")
+            .crossJoin(q)
             .agg(F.count(F.lit(1)).alias("n_test"),
                  F.sum(F.when(F.abs(F.col("y") - F.col("yhat"))
                               <= F.col("qhat"), 1).otherwise(0))
@@ -9223,7 +9223,7 @@ def agg_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max("qhat").alias("qhat"),
                  F.max("n_cal").alias("n_cal")))
     ntr = model.agg(F.sum("n_train").cast("bigint").alias("n_train"))
-    return (test.crossJoin(F.broadcast(ntr))
+    return (test.crossJoin(ntr)
             .select("n_train",
                     F.col("n_cal").cast("bigint").alias("n_cal"),
                     F.col("n_test").cast("bigint").alias("n_test"),
@@ -9286,7 +9286,7 @@ def agg_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_blocks"))
     cstats = cols.agg(
         F.sum(F.col("cj").cast(dec38) * F.col("cj")).alias("sc2"))
-    s = rstats.crossJoin(F.broadcast(cstats))
+    s = rstats.crossJoin(cstats)
     nn = F.col("nn").cast("double")
     q = (2.0 * (3.0 * F.col("sc2").cast("double") - nn * nn)
          / (3.0 * nn - F.col("sr2").cast("double")))
@@ -9569,7 +9569,7 @@ def agg_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          Window.currentRow)
     cdf = h.select("q", F.sum("a").over(wc).alias("ca"),
                    F.sum("b").over(wc).alias("cb"))
-    j = cdf.crossJoin(F.broadcast(tot))
+    j = cdf.crossJoin(tot)
     return j.agg(
         F.max("na").cast("bigint").alias("n_returned"),
         F.max("nb").cast("bigint").alias("n_accepted"),
@@ -9617,7 +9617,7 @@ def agg_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .otherwise(0)).alias("b"))
          .withColumnRenamed("l_quantity", "q"))
     tot = h.agg(F.sum("a").alias("na"), F.sum("b").alias("nb"))
-    j = h.crossJoin(F.broadcast(tot))
+    j = h.crossJoin(tot)
     bc = j.agg(F.sum(F.sqrt(
         (F.col("a").cast("double") / F.col("na"))
         * (F.col("b").cast("double") / F.col("nb")))).alias("bc"))
@@ -9903,7 +9903,7 @@ def agg_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = h.select((F.col("a") + F.col("b")).alias("hj"),
                    F.sum("a").over(wc).alias("mj"),
                    F.sum(F.col("a") + F.col("b")).over(wc).alias("hh"))
-    j = cdf.crossJoin(F.broadcast(tot)).filter(F.col("hh") < F.col("nn"))
+    j = cdf.crossJoin(tot).filter(F.col("hh") < F.col("nn"))
     gap = (F.col("nn").cast("double") * F.col("mj")
            - F.col("na").cast("double") * F.col("hh"))
     s = j.agg(
@@ -9967,7 +9967,7 @@ def win_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = tables.load(spark, sf_dir, "customer")
     n = tables.load(spark, sf_dir, "nation")
     daily = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+             .join(n, c.c_nationkey == n.n_nationkey)
              .groupBy("n_name",
                       F.datediff(F.col("o_orderdate").cast("date"),
                                  F.lit("1992-01-01").cast("date"))
@@ -10063,7 +10063,7 @@ def agg_mahalanobis_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm("sxx", "sx", "sx").alias("vx"),
         cm("syy", "sy", "sy").alias("vy"),
         cm("sxy", "sx", "sy").alias("cxy"))
-    d = pts.crossJoin(F.broadcast(m))
+    d = pts.crossJoin(m)
     dx = F.col("x") - F.col("mx")
     dy = F.col("y") - F.col("my")
     d2 = ((dx * dx * F.col("vy") - 2.0 * dx * dy * F.col("cxy")
@@ -10124,14 +10124,14 @@ def agg_jackknife_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tables.load(spark, sf_dir, "nation")
     g = (li.join(o, li.l_orderkey == o.o_orderkey)
          .join(c, o.o_custkey == c.c_custkey)
-         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+         .join(n, c.c_nationkey == n.n_nationkey)
          .groupBy("n_name")
          .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
                     .cast("decimal(38,0)")).alias("sp"),
               F.sum(F.col("l_quantity").cast("decimal(38,0)"))
               .alias("sq")))
     tot = g.agg(F.sum("sp").alias("tp"), F.sum("sq").alias("tq"))
-    loo = (g.crossJoin(F.broadcast(tot))
+    loo = (g.crossJoin(tot)
            .select(((F.col("tp") - F.col("sp")).cast("double")
                     / (F.col("tq") - F.col("sq")).cast("double"))
                    .alias("th"),
@@ -10142,7 +10142,7 @@ def agg_jackknife_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum(th) + k*thbar^2 only up to float assoc; mirror the oracle's
     # literal (th - avg)^2 sum instead via a second bounded pass.
     avg_th = loo.agg(F.avg("th").alias("thbar"))
-    ss = (loo.crossJoin(F.broadcast(avg_th))
+    ss = (loo.crossJoin(avg_th)
           .agg(F.count(F.lit(1)).alias("k"),
                F.max("theta").alias("theta"),
                F.sum((F.col("th") - F.col("thbar"))
@@ -10188,7 +10188,7 @@ def agg_diversity_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = tables.load(spark, sf_dir, "part")
     c = p.groupBy("p_brand").agg(F.count(F.lit(1)).alias("n"))
     tot = c.agg(F.sum("n").alias("nn"))
-    pr = (c.crossJoin(F.broadcast(tot))
+    pr = (c.crossJoin(tot)
           .select((F.col("n").cast("double") / F.col("nn"))
                   .alias("pr")))
     d = pr.agg(F.count(F.lit(1)).alias("richness"),
@@ -10283,7 +10283,7 @@ def agg_ransac_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod = (cand.filter(F.col("x1") != F.col("x2"))
            .select("cid", b.alias("b"),
                    (F.col("y1") - b * F.col("x1")).alias("a")))
-    cnt = (pts.crossJoin(F.broadcast(mod))
+    cnt = (pts.crossJoin(mod)
            .groupBy("cid", "b", "a")
            .agg(F.sum(F.when(
                F.abs(F.col("y") - (F.col("a") + F.col("b")
@@ -10493,7 +10493,7 @@ def agg_competing_risks_cif(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, -1)
     w_cur = Window.orderBy("dur").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
-    risk = (byt.crossJoin(F.broadcast(tot))
+    risk = (byt.crossJoin(tot)
             .select("dur", "dr", "da",
                     (F.col("nn")
                      - F.coalesce(F.sum("leav").over(w_prev),
@@ -10789,7 +10789,7 @@ def win_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tables.load(spark, sf_dir, "nation")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     daily = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+             .join(n, c.c_nationkey == n.n_nationkey)
              .groupBy("n_name",
                       F.datediff(F.col("o_orderdate").cast("date"),
                                  F.lit("1992-01-01").cast("date"))
@@ -10854,7 +10854,7 @@ def win_obv_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = tables.load(spark, sf_dir, "customer")
     n = tables.load(spark, sf_dir, "nation")
     daily = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+             .join(n, c.c_nationkey == n.n_nationkey)
              .groupBy("n_name",
                       F.datediff(F.col("o_orderdate").cast("date"),
                                  F.lit("1992-01-01").cast("date"))
@@ -10921,7 +10921,7 @@ def agg_youden_j_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow)
     cum = h.select("q", F.sum("p").over(wd).alias("tp"),
                    F.sum("n").over(wd).alias("fp"))
-    j = (cum.crossJoin(F.broadcast(tot))
+    j = (cum.crossJoin(tot)
          .select(F.col("q").alias("threshold"),
                  F.round(F.col("tp").cast("double") / F.col("np"), 6)
                  .alias("tpr"),
@@ -10993,12 +10993,12 @@ def agg_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
         wc = Window.orderBy("bin").rowsBetween(
             Window.unboundedPreceding, Window.currentRow)
         cum = h.select("bin", F.sum("c").over(wc).alias("cum"))
-        return (cum.crossJoin(F.broadcast(tot))
+        return (cum.crossJoin(tot)
                 .filter(F.col("cum") >= 0.9 * F.col("n"))
                 .agg(F.min("bin").alias("q" + col)))
 
-    cnt = (pts.crossJoin(F.broadcast(q90("x")))
-           .crossJoin(F.broadcast(q90("y")))
+    cnt = (pts.crossJoin(q90("x"))
+           .crossJoin(q90("y"))
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum(F.when(F.col("x") > F.col("qx"), 1).otherwise(0))
                 .alias("ax"),
@@ -11105,7 +11105,7 @@ def agg_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
            * F.col("x")).cast("double")
           / (F.col("n") * F.col("sxx")
              - F.col("sx") * F.col("sx")).cast("double"))
-    u = (daily.crossJoin(F.broadcast(s))
+    u = (daily.crossJoin(s)
          .select("x",
                  F.round(ud * ud * 1000000.0).cast(dec).alias("v")))
     t = u.agg(
@@ -11399,7 +11399,7 @@ def agg_hoeffding_d(spark: SparkSession, sf_dir: str) -> DataFrame:
              .localCheckpoint(eager=True))
     b = daily.select(F.col("d").alias("bd"), F.col("x").alias("bx"),
                      F.col("y").alias("by"))
-    pairs = daily.join(F.broadcast(b), F.col("d") != F.col("bd"))
+    pairs = daily.join(b, F.col("d") != F.col("bd"))
     xlt = F.when(F.col("bx") < F.col("x"), 1).otherwise(0)
     xeq = F.when(F.col("bx") == F.col("x"), 1).otherwise(0)
     ylt = F.when(F.col("by") < F.col("y"), 1).otherwise(0)
@@ -11510,7 +11510,7 @@ def agg_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = gr.select(F.col("g").alias("group_b"), F.col("ng").alias("nb"),
                   F.col("s2").alias("sb"))
     pairs = (a.join(b, F.col("group_a") < F.col("group_b"))
-             .crossJoin(F.broadcast(ties)).crossJoin(F.broadcast(tot)))
+             .crossJoin(ties).crossJoin(tot))
     rdiff = (F.col("sa").cast("double") / 2.0 / F.col("na").cast("double")
              - F.col("sb").cast("double") / 2.0
              / F.col("nb").cast("double"))
@@ -12010,7 +12010,7 @@ def agg_white_test(spark: SparkSession, sf_dir: str) -> DataFrame:
            * F.col("x")).cast("double")
           / (F.col("n") * F.col("sxx")
              - F.col("sx") * F.col("sx")).cast("double"))
-    u = (daily.crossJoin(F.broadcast(s))
+    u = (daily.crossJoin(s)
          .select(F.col("x").cast(dec).alias("x"),
                  (F.col("x").cast(dec) * F.col("x")).alias("w"),
                  F.round(ud * ud * 1000000.0).cast(dec).alias("v")))
@@ -12333,7 +12333,7 @@ def agg_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n").cast("double")
                    * (F.col("n") - 1).cast("double")))
     lim = st.select("n", md.alias("md"), sd.alias("sd"))
-    outc = (d.crossJoin(F.broadcast(lim))
+    outc = (d.crossJoin(lim)
             .filter(F.abs(F.col("dd").cast("double") - F.col("md"))
                     > 1.96 * F.col("sd"))
             .agg(F.count(F.lit(1)).alias("n_outside")))
@@ -13200,7 +13200,7 @@ def agg_event_study_car(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tables.load(spark, sf_dir, "nation")
     dec = "decimal(38,0)"
     daily = (o.join(c, c["c_custkey"] == o["o_custkey"])
-             .join(F.broadcast(n),
+             .join(n,
                    n["n_nationkey"] == c["c_nationkey"])
              .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                       .alias("d"))
@@ -13228,7 +13228,7 @@ def agg_event_study_car(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit = est.select("n", b.alias("b"), a.alias("a"), s2.alias("s2"))
     ev = (daily.filter((F.col("d") >= "1998-06-13")
                        & (F.col("d") <= "1998-06-17"))
-          .crossJoin(F.broadcast(fit))
+          .crossJoin(fit)
           .agg(F.sum(F.round(F.col("y").cast("double") - F.col("a")
                              - F.col("b") * F.col("m").cast("double"),
                              6).cast("decimal(38,6)")).cast("double")
@@ -13639,7 +13639,7 @@ def agg_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(F.col("origin") == 1997, F.col("f1") * F.col("f2"))
             .when(F.col("origin") == 1996, F.col("f2"))
             .otherwise(F.lit(1.0)))
-    return (latest.crossJoin(F.broadcast(fx))
+    return (latest.crossJoin(fx)
             .select(F.col("origin").cast("int").alias("origin_year"),
                     F.round(F.col("lat").cast("double") / 100.0, 2)
                     .alias("latest_usd"),
@@ -13901,7 +13901,7 @@ def agg_cucconi_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.coalesce(F.sum("ct").over(wb), F.lit(0)).cast(dec)
          + F.col("ct") + 1).cast(dec).alias("m2"))
     tot = hist.agg(F.sum("ct").cast(dec).alias("nn"))
-    rj = run.crossJoin(F.broadcast(tot))
+    rj = run.crossJoin(tot)
     contra = 2 * F.col("nn") + 2 - F.col("m2")
     s = rj.agg(F.any_value("nn").alias("n"),
                F.sum("cy").alias("n2"),
@@ -14085,9 +14085,9 @@ def agg_breslow_day(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(F.max("l_shipdate").alias("maxship")))
     strata = (o.join(shiplag, o["o_orderkey"] == F.col("ok"))
               .join(c, c["c_custkey"] == o["o_custkey"])
-              .join(F.broadcast(n),
+              .join(n,
                     n["n_nationkey"] == c["c_nationkey"])
-              .join(F.broadcast(r),
+              .join(r,
                     r["r_regionkey"] == n["n_regionkey"])
               .select(F.col("r_name").alias("stratum"),
                       F.when(F.col("o_orderpriority")
@@ -14114,7 +14114,7 @@ def agg_breslow_day(spark: SparkSession, sf_dir: str) -> DataFrame:
          / F.sum(F.round(F.col("b").cast("double")
                          * F.col("c").cast("double") / nn, 12)
                  .cast("decimal(38,12)")).cast("double")).alias("orr"))
-    bd = cells.crossJoin(F.broadcast(mh))
+    bd = cells.crossJoin(mh)
     m1 = (F.col("a") + F.col("b")).cast("double")
     k1 = (F.col("a") + F.col("c")).cast("double")
     nnd = nn
@@ -14198,7 +14198,7 @@ def agg_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (ri.crossJoin(cj)
          .agg(F.sum(F.abs(F.col("i") - F.col("j"))
                     * F.col("ri") * F.col("cj")).alias("dexp")))
-    j = obs.crossJoin(F.broadcast(e))
+    j = obs.crossJoin(e)
     kw = (1.0 - (F.col("n") * F.col("dobs")).cast("double")
           / F.col("dexp").cast("double"))
     return j.select(F.col("n").cast("bigint").alias("n_orders"),

@@ -103,7 +103,7 @@ def join_partition_pruned_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     P.write_partitioned(cust, d, "c_nationkey")
     fact = spark.read.parquet(d)
     dim = tables.load(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 1)
-    return (fact.join(F.broadcast(dim),
+    return (fact.join(dim,
                       fact.c_nationkey == dim.n_nationkey)
             .select("c_custkey", "c_name", "c_nationkey", "n_name"))
 

@@ -190,6 +190,21 @@ def test_bucketed_join_has_no_exchange(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+@pytest.mark.parametrize("name", ["join_fk_individual",
+                                  "join_fk_transitive"])
+def test_fk_join_dimension_over_threshold_not_broadcast(spark, qs, name):
+    # the planner, not a hint, decides the broadcast: a dimension over
+    # autoBroadcastJoinThreshold (here every side, the threshold is
+    # off) is shuffled, not collected and broadcast to every task
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan = plan_of(qs[name](spark, SF_DIR))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastExchange" not in plan
+
+
 def test_partitioned_sink_scan_prunes_directories(spark, qs):
     # the status filter must become PartitionFilters (directory pruning,
     # zero I/O for excluded partitions), NOT a data filter evaluated on

@@ -321,9 +321,11 @@ def test_partitioning_invariance_representative_ops(spark):
     derived = _registry_nondeterminism_risk_ops(spark, qs, sf)
     # pin that the derivation actually sees the classes it claims to:
     # the three r5 fold ops the hand list missed, plus one per marker
+    # (MapInPandas: a query whose returned plan ends in it, not one
+    # that checkpoints the Python stage away before returning)
     for must in ("win_ema_crossover", "ts_holt_winters",
                  "win_ewma_irregular", "ts_kalman_1d",
-                 "mm_image_neardup_ahash", "f_jaro_winkler"):
+                 "mm_image_grayscale_hist", "f_jaro_winkler"):
         assert must in derived, f"derivation lost {must}"
     sweep = sorted(set(names) | derived)
     prev = spark.conf.get("spark.sql.shuffle.partitions")

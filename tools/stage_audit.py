@@ -1,36 +1,46 @@
-"""Runtime stage-level checkpoint audit (VERDICT r9, next-round #4).
+"""Runtime A/B of an explicit plan directive: live vs pass-through.
 
-The r9 #31 sweep kept 18 multi-consumer `localCheckpoint` sites on the
-strength of formatted-plan scan counts plus per-query wall-time A/Bs —
-but three same-shape fixes measured SLOWER and were reverted, proving
-static plan counts overstate replay when AQE reuses identical shuffle
-query stages at runtime. This tool settles the question per query with
-RUNTIME evidence: it executes each named query in both variants inside
-one session, alternating A/B per repeat so host drift hits both sides
-equally, and records what actually ran:
+A static plan count overstates what a `localCheckpoint` or a broadcast
+hint buys: AQE reuses identical shuffle stages at runtime, and the
+planner broadcasts a small side without being told. This tool settles
+it per query with runtime evidence. It runs each named query in two
+variants inside one session, alternating per repeat so host drift hits
+both sides equally:
 
-  - variant "ckpt"   — the committed form (checkpoints live);
-  - variant "nockpt" — `DataFrame.localCheckpoint` monkeypatched to a
-    pass-through while the query is BUILT AND EXECUTED (safe for the
-    audited set: none of the 18 queries is a fixpoint loop, so nothing
-    blocks on a checkpoint-materialization observation).
+  - variant "live" — the committed form;
+  - variant "pass" — the directive monkeypatched to a pass-through
+    while the query is built and executed:
+      `--passthrough localCheckpoint` (default): `DataFrame.localCheckpoint`
+        returns its frame (unsafe for fixpoint loops that observe the
+        materialization);
+      `--passthrough broadcast`: `functions.broadcast` returns its frame.
 
-Per (query, variant): min/median wall seconds (construction + action,
-same timed region as bench.py), and — from the job group's status-
-tracker data — executed job / stage / task counts. A checkpoint is
-LOAD-BEARING when nockpt runs more stages/tasks AND more wall time;
-it is AQE-REDUNDANT when nockpt executes the same work in the same
-time (the duplicated subtrees were deduped at runtime anyway).
+Per (query, variant): min/median wall seconds of build + one full
+action (a `noop` write of the returned frame), and from the job group's
+status-tracker data, the executed job / stage / task counts. The
+`plan` column compares the returned frame's AQE-initial physical plan
+(formatted; expression, exchange, RDD and lambda-variable ids stripped)
+between the variants: "same", "differs", or "unstable" when the live
+variant's own plans differ between builds. Verdicts:
 
-    python tools/stage_audit.py [--repeats N] [name ...]
+  - SAME WORK — same plan and equal jobs, stages and tasks: the
+    directive carries no load at this scale;
+  - LOAD-BEARING — pass runs more stages and >10% more wall time;
+  - REDUNDANT — pass is >10% faster;
+  - NEUTRAL — anything else.
 
-Default names: the 18 #31 sites. Prints a markdown table (pasteable
-into OPTIMIZATION_r10.md).
+    python tools/stage_audit.py [--passthrough localCheckpoint|broadcast]
+                                [--repeats N] [name ...]
+
+Default names: the 18 multi-consumer checkpoint queries of
+OPTIMIZATION_r09.md. `SPARK_GRAFT_SF_DIR` picks the data (default sf0.1).
+Prints a markdown table.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import statistics
 import sys
 import time
@@ -49,18 +59,30 @@ DEFAULT_NAMES = [
     "agg_jonckheere_terpstra", "ts_matrix_profile", "ts_seasonal_decompose",
 ]
 
+_PLAN_IDS = re.compile(
+    r"#\d+|plan_id=\d+|(?<=RDD)\[\d+\]|(?<=lambda )(\w+?)_\d+\b")
+
 
 def main() -> None:
     args = sys.argv[1:]
-    repeats = 3
-    if args and args[0] == "--repeats":
-        repeats = int(args[1])
+    repeats, directive = 3, "localCheckpoint"
+    while args and args[0] in ("--repeats", "--passthrough"):
+        if args[0] == "--repeats":
+            repeats = int(args[1])
+        else:
+            directive = args[1]
         args = args[2:]
     names = args or DEFAULT_NAMES
 
+    from pyspark.sql import functions
     from pyspark.sql.classic.dataframe import DataFrame
     from pmc_conversion_spark.session import get_spark
     import __spark_entry__ as E
+
+    owner = {"localCheckpoint": DataFrame, "broadcast": functions}[directive]
+    real = getattr(owner, directive)
+    passthrough = ((lambda self, *a, **k: self) if owner is DataFrame
+                   else (lambda df: df))
 
     spark = get_spark("stage-audit")
     qs = E.queries()
@@ -73,19 +95,20 @@ def main() -> None:
     (spark.range(n_workers).repartition(n_workers)
      .mapInPandas(lambda it: it, "id long").count())
 
-    real_ckpt = DataFrame.localCheckpoint
-
     def run_once(name: str, variant: str, rep: int) -> dict:
         group = f"audit:{name}:{variant}:{rep}"
         sc.setJobGroup(group, group)
-        if variant == "nockpt":
-            DataFrame.localCheckpoint = lambda self, eager=True: self
+        if variant == "pass":
+            setattr(owner, directive, passthrough)
         try:
             t0 = time.time()
-            qs[name](spark, SF_DIR).count()
+            df = qs[name](spark, SF_DIR)
+            plan = sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+            df.write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
         finally:
-            DataFrame.localCheckpoint = real_ckpt
+            setattr(owner, directive, real)
             sc.setJobGroup(None, None)
         jobs = tracker.getJobIdsForGroup(group)
         stages, tasks = 0, 0
@@ -98,43 +121,56 @@ def main() -> None:
                 if si is not None and si.numCompletedTasks > 0:
                     stages += 1
                     tasks += si.numTasks
-        return {"wall": wall, "jobs": len(jobs),
-                "stages": stages, "tasks": tasks}
+        return {"wall": wall, "jobs": len(jobs), "stages": stages,
+                "tasks": tasks,
+                "plan": _PLAN_IDS.sub(lambda m: m.group(1) or "", plan)}
 
     print("| query | variant | wall min | wall med | jobs | stages "
-          "| tasks | verdict |")
-    print("|---|---|---|---|---|---|---|---|")
+          "| tasks | plan | verdict |")
+    print("|---|---|---|---|---|---|---|---|---|")
     for name in names:
         if name not in qs:
-            print(f"| {name} | — | not registered | | | | | |")
+            print(f"| {name} | — | not registered | | | | | | |")
             continue
         # one untimed warm pass per variant (JIT for this query's shapes)
-        run_once(name, "ckpt", -1)
-        run_once(name, "nockpt", -1)
-        rows = {"ckpt": [], "nockpt": []}
-        for rep in range(repeats):          # alternate to share drift
-            rows["ckpt"].append(run_once(name, "ckpt", rep))
-            rows["nockpt"].append(run_once(name, "nockpt", rep))
+        rows = {"live": [], "pass": []}
+        try:
+            for rep in range(-1, repeats):  # alternate to share drift
+                rows["live"].append(run_once(name, "live", rep))
+                rows["pass"].append(run_once(name, "pass", rep))
+        except Exception as exc:  # noqa: BLE001
+            print(f"| {name} | — | ERROR {type(exc).__name__} "
+                  "| | | | | | |", flush=True)
+            continue
+        plans = {v: {r["plan"] for r in rs} for v, rs in rows.items()}
         out = {}
         for v, rs in rows.items():
-            walls = [r["wall"] for r in rs]
+            walls = [r["wall"] for r in rs[1:]]
             out[v] = {
                 "min": min(walls), "med": statistics.median(walls),
-                "jobs": max(r["jobs"] for r in rs),
-                "stages": max(r["stages"] for r in rs),
-                "tasks": max(r["tasks"] for r in rs)}
-        a, b = out["ckpt"], out["nockpt"]
-        if b["stages"] > a["stages"] and b["min"] > a["min"] * 1.10:
+                "jobs": max(r["jobs"] for r in rs[1:]),
+                "stages": max(r["stages"] for r in rs[1:]),
+                "tasks": max(r["tasks"] for r in rs[1:])}
+        a, b = out["live"], out["pass"]
+        if len(plans["live"]) > 1:
+            plan = "unstable"
+        else:
+            plan = "same" if plans["live"] == plans["pass"] else "differs"
+        if plan == "same" and all(a[k] == b[k]
+                                  for k in ("jobs", "stages", "tasks")):
+            verdict = "SAME WORK"
+        elif b["stages"] > a["stages"] and b["min"] > a["min"] * 1.10:
             verdict = "LOAD-BEARING"
         elif b["min"] < a["min"] * 0.90:
-            verdict = "REDUNDANT (nockpt faster)"
+            verdict = "REDUNDANT"
         else:
             verdict = "NEUTRAL"
-        for v in ("ckpt", "nockpt"):
+        for v in ("live", "pass"):
             o = out[v]
             print(f"| {name} | {v} | {o['min']:.3f} | {o['med']:.3f} "
                   f"| {o['jobs']} | {o['stages']} | {o['tasks']} "
-                  f"| {verdict if v == 'nockpt' else ''} |")
+                  f"| {plan if v == 'pass' else ''} "
+                  f"| {verdict if v == 'pass' else ''} |", flush=True)
 
 
 if __name__ == "__main__":
