@@ -1,50 +1,72 @@
 """Join-family operators (SURVEY.md §2.3).
 
-All reference joins are equi-joins on ids/paths; small dimension sides
+Most reference joins are equi-joins on ids/paths; small dimension sides
 (codebooks, manifests, config-derived tables) are broadcast explicitly so
-a 1000-executor run never shuffles the fact side for them.
+a 1000-executor run never shuffles the fact side for them. The priority
+merge is no join at all: one union of the sources and one aggregation
+on the key (``min_by`` per attribute).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def priority_merge(sources: Sequence[DataFrame], key: str,
-                   attrs: Sequence[str]) -> DataFrame:
+                   attrs: Sequence[str],
+                   priority: Mapping[str, Sequence[int]] | None = None
+                   ) -> DataFrame:
     """First-listed-source-wins merge of attributes over an entity key.
 
     Reference: sources_config.json:5-49 — e.g. Individual.birth_date from
     RDP-Patient.tsv (priority 1) else individual.csv (priority 2); the id
     universe is the union of ids over all contributing sources.
 
-    Spark plan: chain of full_outer joins on ``key`` (ids from any source
-    survive) + ``coalesce`` per attribute in priority order. N sources =>
-    N-1 shuffles on the same key, which AQE collapses to co-partitioned
-    exchanges; for bounded dims callers may broadcast all but the first.
+    ``priority[a]`` lists the indices of the sources that supply ``a``,
+    highest priority first; by default every source that has column
+    ``a``, in list order. An attribute no source supplies is a NULL
+    string. Rows with a NULL key are dropped. Keys must be unique within
+    each source: a key repeated in one source is not merged into one row
+    per value but reduced to an arbitrary one of them (sources2csr
+    raises ``DuplicateIdError`` before it merges).
+
+    Spark plan: each source keeps its non-NULL-key rows and carries a
+    ``__rank_<a>`` column per supplied attribute (its rank where the
+    value is non-NULL, else NULL); the sources are combined with
+    ``unionByName`` and one ``groupBy(key)`` takes ``min_by(a,
+    __rank_<a>)`` per attribute — one shuffle on the key whatever the
+    source count, and ids from any source survive. A single source is
+    only projected, with no shuffle.
     """
     if not sources:
         raise ValueError("priority_merge needs at least one source")
-    renamed = []
+    if priority is None:
+        priority = {a: [i for i, s in enumerate(sources) if a in s.columns]
+                    for a in attrs}
+    layers = []
     for i, src in enumerate(sources):
-        cols = [F.col(key).alias(key)]
+        cols = [F.col(key)]
         for a in attrs:
-            if a in src.columns:
-                cols.append(F.col(a).alias(f"__{a}_{i}"))
-        renamed.append(src.select(*cols))
-    merged = renamed[0]
-    for nxt in renamed[1:]:
-        merged = merged.join(nxt, on=key, how="full_outer")
-    out_cols: list[Column] = [F.col(key)]
-    for a in attrs:
-        layers = [F.col(f"__{a}_{i}") for i, src in enumerate(sources)
-                  if a in src.columns]
-        out_cols.append(F.coalesce(*layers).alias(a) if layers
-                        else F.lit(None).alias(a))
-    return merged.select(*out_cols)
+            if i in priority[a]:
+                cols += [F.col(a), F.when(F.col(a).isNotNull(),
+                                          priority[a].index(i))
+                         .alias(f"__rank_{a}")]
+        layers.append(src.filter(F.col(key).isNotNull()).select(*cols))
+    none = F.lit(None).cast("string")
+    if len(layers) == 1:
+        return layers[0].select(key, *[a if priority[a] else none.alias(a)
+                                       for a in attrs])
+    union = reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True),
+                   layers)
+    if not attrs:
+        return union.select(key).distinct()
+    return union.groupBy(key).agg(*[
+        F.min_by(a, f"__rank_{a}").alias(a) if priority[a] else none.alias(a)
+        for a in attrs])
 
 
 def codebook_decode(df: DataFrame, codebook: DataFrame,

@@ -52,6 +52,11 @@ class EntityConfig:
                 return a
         raise KeyError(name)
 
+    def files(self) -> list[str]:
+        """The source files of every attribute, in first-seen order."""
+        return list(dict.fromkeys(s.file for a in self.attributes
+                                  for s in a.sources))
+
 
 @dataclass(frozen=True)
 class FileFormat:

@@ -49,13 +49,7 @@ def load_ontology_nodes(path: str = REF_ONTOLOGY) -> list[dict]:
 def referenced_files(config: CM.SourcesConfig) -> list[str]:
     """Data files referenced by any attribute source, in first-seen
     order (the order sources_config.json declares them)."""
-    files: list[str] = []
-    for e in config.entities:
-        for a in e.attributes:
-            for s in a.sources:
-                if s.file not in files:
-                    files.append(s.file)
-    return files
+    return list(dict.fromkeys(f for e in config.entities for f in e.files()))
 
 
 def csv_header(path: str, delimiter: str) -> list[str]:

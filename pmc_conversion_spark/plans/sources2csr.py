@@ -4,18 +4,23 @@ Stage 2 of the reference dataflow (luigi-pipeline/main.py:105-112): merge
 heterogeneous delimited sources into typed entity tables with
 first-listed-source-wins attribute precedence, codebook decoding, date
 normalization, and primary-key validation. The compiler emits a single
-declarative plan per entity — Catalyst sees the whole merge and can
-push filters/pruning into every source scan.
+declarative plan per entity — one projection per source file, their
+union and one ``groupBy(id)`` taking ``min_by(value, rank)`` per
+attribute (``operators.joins.priority_merge``) — so Catalyst sees the
+whole merge and can push filters/pruning into every source scan.
 """
 
 from __future__ import annotations
 
 from collections.abc import Collection
+from dataclasses import replace
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pmc_conversion_spark.functions import dates as D
+from pmc_conversion_spark.operators.joins import priority_merge
 from pmc_conversion_spark.plans.config_model import EntityConfig, SourcesConfig
 from pmc_conversion_spark.sources.codebook import codebook_maps
 
@@ -81,68 +86,21 @@ def project_source(df: DataFrame, entity: EntityConfig, file: str,
     return df.select(*cols)
 
 
-def _dup_check_frame(proj: DataFrame, entity: EntityConfig,
-                     file: str) -> DataFrame:
-    """Raw (entity, file, id) key stream for the deferred uniqueness
-    check. Aggregation happens once over the union of every source's
-    stream (``run_dup_checks``), so N sources cost one shuffle total,
-    not N separate aggregation jobs."""
-    return (proj.filter(F.col(entity.id_attr).isNotNull())
-            .select(F.lit(entity.name).alias("entity"),
-                    F.lit(file).alias("file"),
-                    F.col(entity.id_attr).cast("string").alias("id")))
+def _merge(frames: dict[str, DataFrame], entity: EntityConfig,
+           config: SourcesConfig, codebooks: dict[str, CodebookRows]
+           ) -> tuple[DataFrame, list[DataFrame]]:
+    """One entity's priority merge and its ``(entity, file, id)`` key
+    streams (non-NULL ids only), one per source file.
 
-
-def run_dup_checks(checks: list[DataFrame]) -> None:
-    """Execute every pending uniqueness check as ONE Spark job: union
-    the raw key streams map-side, aggregate once on (entity, file, id)
-    — map-side combine makes the shuffle carry one row per distinct
-    key per task. The r2 shape was one collect per (entity, file):
-    14 driver-blocking jobs on the reference config, now 1. Raises
-    :class:`DuplicateIdError` naming the first few offenders."""
-    if not checks:
-        return
-    u = checks[0]
-    for c in checks[1:]:
-        u = u.unionByName(c)
-    dups = (u.groupBy("entity", "file", "id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(5).collect())
-    if dups:
-        msg = ", ".join(f"{r['entity']}/{r['file']}: {r['id']}"
-                        for r in dups)
-        raise DuplicateIdError(f"duplicate ids: {msg}")
-
-
-def build_entity(frames: dict[str, DataFrame], entity: EntityConfig,
-                 config: SourcesConfig,
-                 codebooks: dict[str, CodebookRows] | None = None,
-                 validate_ids: bool = True,
-                 dup_checks: list[DataFrame] | None = None) -> DataFrame:
-    """Compile the full priority merge for one entity.
-
-    ``frames``: file name -> raw source DataFrame. Attribute precedence
-    is per-attribute (an attribute's own source order), not per-file:
-    every contributing file is projected once, all projections are
-    full-outer joined on the id, and each output attribute coalesces its
-    layers in its declared order (sources_config.json:5-49 semantics;
-    SURVEY §7.4 risk 2 — ids from any source survive).
-
-    When ``dup_checks`` is a list, id-uniqueness validation is deferred:
-    the per-source duplicate frames are appended to it and the caller
-    runs them all in one job (``run_dup_checks``) — the build_all path.
-    Otherwise validation executes eagerly, one job for all this
-    entity's sources.
-    """
-    codebooks = codebooks or {}
-    files: list[str] = []
-    for a in entity.attributes:
-        for s in a.sources:
-            if s.file not in files:
-                files.append(s.file)
-    projected: dict[str, DataFrame] = {}
-    own_checks: list[DataFrame] = []
+    Attribute precedence is per-attribute (an attribute's own source
+    order), not per-file: every contributing file is projected once and
+    :func:`~pmc_conversion_spark.operators.joins.priority_merge` takes
+    each attribute from its highest-priority file with a non-NULL value
+    (sources_config.json:5-49 semantics; SURVEY §7.4 risk 2 — ids from
+    any source survive)."""
+    key = entity.id_attr
+    files = entity.files()
+    projected, keys = [], []
     for f in files:
         if f not in frames:
             raise ValueError(f"{entity.name}: source file {f!r} not provided")
@@ -150,41 +108,14 @@ def build_entity(frames: dict[str, DataFrame], entity: EntityConfig,
         cb = codebooks.get(fmt.codebook) if fmt.codebook else None
         proj = project_source(frames[f], entity, f, codebook=cb,
                               codebook_columns=config.codebook_columns.get(f))
-        if validate_ids:
-            target = own_checks if dup_checks is None else dup_checks
-            target.append(_dup_check_frame(proj, entity, f))
-        projected[f] = proj
-    run_dup_checks(own_checks)
-
-    key = entity.id_attr
-    renamed = []
-    for i, f in enumerate(files):
-        proj = projected[f]
-        cols = [F.col(key).alias(key)]
-        for a in entity.attributes:
-            if a.name == key:
-                continue
-            if a.name in proj.columns:
-                cols.append(F.col(a.name).alias(f"__{a.name}_{i}"))
-        renamed.append(proj.filter(F.col(key).isNotNull()).select(*cols))
-    merged = renamed[0]
-    for nxt in renamed[1:]:
-        merged = merged.join(nxt, on=key, how="full_outer")
-
-    out_cols: list[Column] = [F.col(key)]
-    for a in entity.attributes:
-        if a.name == key:
-            continue
-        layers: list[Column] = []
-        for s in a.sources:  # declared priority order
-            i = files.index(s.file)
-            c = f"__{a.name}_{i}"
-            if c in merged.columns and not any(
-                    str(layer) == str(F.col(c)) for layer in layers):
-                layers.append(F.col(c))
-        out_cols.append(F.coalesce(*layers).alias(a.name) if layers
-                        else F.lit(None).cast("string").alias(a.name))
-    return merged.select(*out_cols)
+        projected.append(proj)
+        keys.append(proj.filter(F.col(key).isNotNull())
+                    .select(F.lit(entity.name).alias("entity"),
+                            F.lit(f).alias("file"),
+                            F.col(key).cast("string").alias("id")))
+    priority = {a.name: [files.index(s.file) for s in a.sources]
+                for a in entity.attributes if a.name != key}
+    return priority_merge(projected, key, list(priority), priority), keys
 
 
 def build_all(frames: dict[str, DataFrame], config: SourcesConfig,
@@ -192,11 +123,36 @@ def build_all(frames: dict[str, DataFrame], config: SourcesConfig,
               ) -> dict[str, DataFrame]:
     """All entity tables (the CSR) from one set of source frames.
 
-    Id-uniqueness validation for every (entity, source) pair runs as a
-    single deferred Spark job, not one job each."""
-    checks: list[DataFrame] = []
-    out = {e.name: build_entity(frames, e, config, codebooks,
-                                dup_checks=checks)
-           for e in config.entities}
-    run_dup_checks(checks)
+    ``frames``: file name -> raw source DataFrame. Each entity is one
+    union + ``groupBy(id)``/``min_by`` plan (a single-source entity is a
+    projection). Before any entity is returned, id uniqueness for every
+    (entity, source) pair is checked in ONE Spark job: the key streams
+    are unioned map-side and aggregated once on (entity, file, id), so
+    the shuffle carries one row per distinct key per task. Raises
+    :class:`DuplicateIdError` naming the first few offenders."""
+    out: dict[str, DataFrame] = {}
+    keys: list[DataFrame] = []
+    for e in config.entities:
+        out[e.name], streams = _merge(frames, e, config, codebooks or {})
+        keys += streams
+    if keys:
+        dups = (reduce(DataFrame.unionByName, keys)
+                .groupBy("entity", "file", "id")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n") > 1)
+                .limit(5).collect())
+        if dups:
+            msg = ", ".join(f"{r['entity']}/{r['file']}: {r['id']}"
+                            for r in dups)
+            raise DuplicateIdError(f"duplicate ids: {msg}")
     return out
+
+
+def build_entity(frames: dict[str, DataFrame], entity: EntityConfig,
+                 config: SourcesConfig,
+                 codebooks: dict[str, CodebookRows] | None = None
+                 ) -> DataFrame:
+    """One entity's CSR table: :func:`build_all` over a config holding
+    only ``entity``."""
+    return build_all(frames, replace(config, entities=(entity,)),
+                     codebooks)[entity.name]

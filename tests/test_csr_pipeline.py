@@ -5,16 +5,19 @@ the PAT2-removal incremental-rerun scenario (test_data_e2e/README:15-18).
 
 from __future__ import annotations
 
+import contextlib
+import dataclasses
 import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
+from pmc_conversion_spark.operators.joins import priority_merge
 from pmc_conversion_spark.plans import config_model as CM
 from pmc_conversion_spark.plans.eav import unpivot_to_eav
 from pmc_conversion_spark.plans.ontology import bind_observations, flatten_tree
 from pmc_conversion_spark.plans.sources2csr import (
-    DuplicateIdError, build_entity)
+    DuplicateIdError, build_all, build_entity)
 from pmc_conversion_spark.queries.pipeline import (
     CSR_EXPECT, INDIVIDUAL_ENTITY, SOURCES_CONFIG, _csr_individual)
 
@@ -27,18 +30,76 @@ def test_priority_merge_semantics(spark):
     assert rows == expect
 
 
-def test_duplicate_ids_raise(spark, fixture_df):
+#: a 2-file entity whose attributes disagree on precedence: ``a``
+#: prefers f1, ``b`` prefers f2
+PREC_ENTITY = CM.EntityConfig(name="E", id_attr="id", attributes=(
+    CM.Attribute("id", "text", (CM.SourceRef("f1"), CM.SourceRef("f2"))),
+    CM.Attribute("a", "text", (CM.SourceRef("f1"), CM.SourceRef("f2"))),
+    CM.Attribute("b", "text", (CM.SourceRef("f2"), CM.SourceRef("f1")))))
+PREC_F1 = [("K1", "a1", "b1"), ("K2", None, "b1"), ("K3", "a1", None),
+           (None, "a1", "b1")]
+PREC_F2 = [("K1", "a2", "b2"), ("K2", "a2", None), ("K3", None, None),
+           ("K4", "a2", "b2"), (None, "a2", "b2")]
+#: id -> (a, b); the NULL-id rows of both files are dropped
+PREC_EXPECT = {
+    "K1": ("a1", "b2"),   # each attribute takes its own first file
+    "K2": ("a2", "b1"),   # NULL in the winning file falls through
+    "K3": ("a1", None),   # NULL in both files stays NULL
+    "K4": ("a2", "b2"),   # only in the lower-priority file for a
+}
+
+
+@pytest.mark.parametrize("route", ["build_entity", "priority_merge"])
+def test_per_attribute_precedence(spark, fixture_df, route):
+    f1 = fixture_df(PREC_F1, "id string, a string, b string")
+    f2 = fixture_df(PREC_F2, "id string, a string, b string")
+    if route == "build_entity":
+        out = build_entity({"f1": f1, "f2": f2}, PREC_ENTITY,
+                           CM.SourcesConfig(entities=(PREC_ENTITY,)))
+    else:
+        out = priority_merge([f1, f2], "id", ["a", "b"],
+                             priority={"a": [0, 1], "b": [1, 0]})
+    assert out.columns == ["id", "a", "b"]
+    rows = out.collect()
+    assert len(rows) == len(PREC_EXPECT)
+    assert {r.id: (r.a, r.b) for r in rows} == PREC_EXPECT
+
+
+#: a single-source entity next to the 2-source Individual
+STUDY_ENTITY = CM.EntityConfig(name="Study", id_attr="study_id", attributes=(
+    CM.Attribute("study_id", "text", (CM.SourceRef("study.csv", "STUDY_ID"),)),
+    CM.Attribute("title", "text", (CM.SourceRef("study.csv", "title"),))))
+RDP_OK = [("PAT1", "15AUG2000", "M")]
+IND_OK = [("PAT1", "1", ""), ("PAT2", "2", "")]
+STUDY_OK = [("S1", "one"), ("S2", "two")]
+
+
+@pytest.mark.parametrize("rdp, ind, study, raises", [
+    pytest.param([("PAT1", "15AUG2000", "M"), ("PAT1", "16AUG2000", "V")],
+                 IND_OK, STUDY_OK, True, id="first-source"),
+    pytest.param(RDP_OK, IND_OK + [("PAT2", "9", "")], STUDY_OK, True,
+                 id="lower-priority-source"),
+    pytest.param(RDP_OK, IND_OK, STUDY_OK + [("S1", "again")], True,
+                 id="single-source-entity"),
+    pytest.param(RDP_OK + [(None, "", "M"), (None, "", "V")],
+                 IND_OK + [(None, "1", ""), (None, "2", "")], STUDY_OK,
+                 False, id="repeated-null-id"),
+])
+def test_duplicate_ids_raise(spark, fixture_df, rdp, ind, study, raises):
+    """Duplicates raise inside ``build_all``, before the caller runs any
+    action on its frames."""
     frames = {
         "RDP-Patient.tsv": fixture_df(
-            [("PAT1", "15AUG2000", "M"), ("PAT1", "16AUG2000", "V")],
-            "INDIVIDUAL_ID string, Gebdat string, Geslacht string"),
+            rdp, "INDIVIDUAL_ID string, Gebdat string, Geslacht string"),
         "individual.csv": fixture_df(
-            [("PAT1", "1", "")],
-            "INDIVIDUAL_ID string, SEX string, DTOB string"),
+            ind, "INDIVIDUAL_ID string, SEX string, DTOB string"),
+        "study.csv": fixture_df(study, "STUDY_ID string, title string"),
     }
-    with pytest.raises(DuplicateIdError):
-        build_entity(frames, INDIVIDUAL_ENTITY, SOURCES_CONFIG,
-                     codebooks={})
+    config = dataclasses.replace(
+        SOURCES_CONFIG, entities=(INDIVIDUAL_ENTITY, STUDY_ENTITY))
+    with (pytest.raises(DuplicateIdError) if raises
+          else contextlib.nullcontext()):
+        build_all(frames, config, codebooks={})
 
 
 def test_missing_declared_column_raises(spark, fixture_df):

@@ -179,3 +179,46 @@ def test_build_all_plans_have_no_broadcast(spark, dropzone):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan, name
+
+
+def _individual(spark, dropzone):
+    data_dir, config = dropzone
+    frames, codebooks = RE.load_frames(spark, data_dir, config)
+    return build_all(frames, config, codebooks)["Individual"]
+
+
+def test_individual_merge_has_no_join(spark, dropzone):
+    """Individual has 4 source files; its merge is one aggregation."""
+    df = _individual(spark, dropzone)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for join in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"):
+        assert join not in plan
+    assert "Aggregate(" in plan
+
+
+def test_individual_write_runs_at_most_two_jobs(spark, dropzone, tmp_path):
+    df = _individual(spark, dropzone)
+    as_text = df.select([F.col(c).cast("string") for c in df.columns])
+    jobs, _ = jobs_run_by(spark, lambda: sinks.write_tsv(
+        as_text, str(tmp_path / "Individual"), single_file=True))
+    assert jobs <= 2
+
+
+def test_csr_round_trip(spark, dropzone, tmp_path):
+    """``read_csr`` reads the TSVs with a positional schema, so the merge
+    output must come back under the same names, types and rows."""
+    data_dir, config = dropzone
+    frames, codebooks = RE.load_frames(spark, data_dir, config)
+    csr = build_all(frames, config, codebooks)
+    for name, df in csr.items():
+        sinks.write_tsv(df.select([F.col(c).cast("string")
+                                   for c in df.columns]),
+                        str(tmp_path / name), single_file=True)
+    config_path = os.path.join(os.path.dirname(data_dir), "config",
+                               "sources_config.json")
+    back = RE.read_csr(spark, str(tmp_path), config_path)
+    assert sorted(back) == sorted(csr)
+    for name, df in csr.items():
+        assert back[name].dtypes == df.dtypes, name
+        assert _rows(back[name]) == _rows(df), name
