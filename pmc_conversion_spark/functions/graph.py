@@ -1,4 +1,4 @@
-"""Distributed connected components — the cluster step of near-dup
+"""Connected components — the cluster step of near-dup
 deduplication.
 
 Pair generators (``ngram_jaccard_pairs``, ``minhash_lsh_pairs``,
@@ -16,12 +16,29 @@ path graphs — unlike naive label propagation, whose round count is the
 graph diameter. State per round is the edge list only (no vertex
 attributes), and ``localCheckpoint`` truncates the lineage so the plan
 does not grow with iterations.
+
+Each round costs a checkpoint job plus shuffle jobs whatever the edge
+count, so a small edge set finishes on the driver instead: the first
+checkpoint already observes the edge count, and at or below
+``DRIVER_EDGES`` the edges are collected in one job and joined by
+union-find. The bound caps driver memory, so an edge set that grows
+1000× takes the distributed rounds and is never collected.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pmc_conversion_spark.util import checkpoint_observed, local_df
+
+#: Largest edge count that finishes on the driver. A driver-memory cap,
+#: not a speed crossover: on a seeded random graph of 2**20 long edges
+#: (local[4], 4-core host) the driver's Python peak RSS went 138 →
+#: 344 MB and the JVM's peak was 1.4 GB, while the driver finish beat
+#: the distributed rounds at every size measured (10⁴ edges 0.88 vs
+#: 5.28 s, 10⁶ edges 7.2 vs 26.9 s).
+DRIVER_EDGES = 1 << 20
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -61,6 +78,46 @@ def _small_star(e: DataFrame) -> DataFrame:
             .distinct())
 
 
+def _star_forest(e: DataFrame) -> DataFrame:
+    """(node, component) of a converged edge set, a star forest whose
+    edges run u -> component root (= min id)."""
+    return (e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+            .union(e.select(F.col("v").alias("node"),
+                            F.col("v").alias("component")))
+            .distinct())
+
+
+def _min_roots(pairs) -> dict:
+    """Union-find over (u, v) pairs: node -> the minimum id of its
+    component. The larger root always hangs under the smaller, so every
+    root is its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for u, v in pairs:
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    return {x: find(x) for x in parent}
+
+
+def _driver_components(e: DataFrame) -> DataFrame:
+    """Collect the edges (one job) and label components on the driver;
+    the schema is the distributed path's, read from its plan."""
+    pdf = e.toPandas()
+    roots = _min_roots(zip(pdf["u"].tolist(), pdf["v"].tolist()))
+    return local_df(e.sparkSession, list(roots.items()),
+                    _star_forest(e).schema)
+
+
 def connected_components(edges: DataFrame, *, src: str = "src",
                          dst: str = "dst",
                          max_iter: int = 16) -> DataFrame:
@@ -72,10 +129,19 @@ def connected_components(edges: DataFrame, *, src: str = "src",
     no edges are their own singleton components and are the caller's
     union (they never need a shuffle).
 
-    Per round: large-star then small-star (two shuffles each), then an
-    edge-set fixpoint check (one symmetric-difference job). Rounds are
-    O(log n) by the published bound; ``max_iter`` is a safety rail and
-    non-convergence raises rather than returning partial clusters.
+    The first checkpoint (self-loops dropped) observes the edge count,
+    duplicates included, which is the number of rows a collect would
+    bring to the driver. At or below ``DRIVER_EDGES`` the edges are
+    collected and labelled by union-find on the driver, and the result
+    is a local frame: the input's jobs plus one collect, and reading
+    the result runs no shuffle.
+
+    Above the bound, a second checkpoint drops duplicate edges, then
+    per round: large-star then small-star (two shuffles each), then a
+    checkpoint whose observed (count, hash-sum) fingerprint is the
+    fixpoint check. Rounds are O(log n) by the
+    published bound; ``max_iter`` is a safety rail and non-convergence
+    raises rather than returning partial clusters.
     """
     def ckpt_fingerprint(df: DataFrame) -> tuple[DataFrame, tuple]:
         # fingerprint = (count, order-insensitive hash-sum): one cheap
@@ -87,16 +153,22 @@ def connected_components(edges: DataFrame, *, src: str = "src",
         # r9 (guide §1.2): the aggregate rides the checkpoint
         # materialization as an ``observe`` metric, so the per-round
         # fingerprint job (a full scan of the edge frame) disappears.
-        from pmc_conversion_spark.util import checkpoint_observed
         d, m = checkpoint_observed(
             df, n=F.count(F.lit(1)),
             h=F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")))
         return d, (m["n"], m["h"])
 
+    # no distinct before the gate: it would cost the driver path a
+    # shuffle job, and union-find ignores duplicate edges
     e, fp = ckpt_fingerprint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct())
+        .filter(F.col("u") != F.col("v")))
+    if fp[0] <= DRIVER_EDGES:
+        return _driver_components(e)
+    # the rounds need a duplicate-free start: the stars emit distinct
+    # edges, so a duplicate in the first fingerprint would cost an
+    # extra round before the fixpoint is seen
+    e, fp = ckpt_fingerprint(e.distinct())
     for _ in range(max_iter):
         e, fp2 = ckpt_fingerprint(_small_star(_large_star(e)))
         if fp2 == fp:
@@ -105,8 +177,4 @@ def connected_components(edges: DataFrame, *, src: str = "src",
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds")
-    # converged edge set is a star forest: u -> component root (= min id)
-    return (e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-            .union(e.select(F.col("v").alias("node"),
-                            F.col("v").alias("component")))
-            .distinct())
+    return _star_forest(e)

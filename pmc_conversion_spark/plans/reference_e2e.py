@@ -153,7 +153,10 @@ def read_csr(spark: SparkSession, working_dir: str,
     attribute kinds (schema-on-config — date/numeric/string), so the
     frames are type-identical to what ``build_csr`` produced: stage 2
     wrote dates as ISO strings and numerics as plain doubles, which
-    the declared schema parses back losslessly."""
+    the declared schema parses back losslessly. The schema is matched
+    to each file's header by name, so a TSV whose columns come in
+    another order fails on the first action instead of being read
+    under the wrong names."""
     from pmc_conversion_spark.sources.scans import scan_csv_delim
     config = load_sources_config(config_path)
     out: dict[str, DataFrame] = {}

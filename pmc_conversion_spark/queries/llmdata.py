@@ -1026,9 +1026,11 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard pair graph (threshold 1/20), so transitive duplicates land
     in one cluster even when their direct pair was never emitted.
 
-    The engine runs alternating large-star/small-star
-    (functions/graph.py — O(log n) rounds of two groupBy-min shuffles,
-    lineage truncated per round); the oracle states the same fixpoint
+    The engine's ``functions/graph.connected_components`` collects an
+    edge set of at most ``DRIVER_EDGES`` edges and joins it by
+    union-find on the driver; a larger one runs alternating
+    large-star/small-star (O(log n) rounds of two groupBy-min shuffles,
+    lineage truncated per round). The oracle states the same fixpoint
     via a recursive transitive-closure CTE. ``component`` is the
     minimum doc_id of the cluster on both engines."""
     from pmc_conversion_spark.functions.graph import connected_components
@@ -3075,7 +3077,8 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of ``dedup_cluster_cc``'s lexical clusters, and the grouping
     SemDeDup-style corpus pruning keys on. Pair generation is the
     blocked-matmul plan (no all-pairs materialization); clustering is
-    the same O(log n) large-star/small-star loop, so the composite
+    the same ``connected_components`` (driver union-find up to its edge
+    bound, large-star/small-star rounds above), so the composite
     inherits both scale paths unchanged. ``component`` is the
     cluster's minimum vec_id on both engines."""
     from pmc_conversion_spark.functions.graph import connected_components
@@ -7171,10 +7174,10 @@ _MM_NEARDUP_CTES = """
 def mm_image_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup CLUSTERS: the aHash block-join pairs
     (mm_image_neardup_ahash) closed under transitivity with the same
-    large-star/small-star connected-components loop the text dedup
-    family uses — so a picture re-encoded twice at different sizes
-    collapses into ONE cluster with a canonical (minimum media_id)
-    representative, exactly like text near-dup canonicalization.
+    connected components the text dedup family uses — so a picture
+    re-encoded twice at different sizes collapses into ONE cluster with
+    a canonical (minimum media_id) representative, exactly like text
+    near-dup canonicalization.
     Reuses the registered pair query end-to-end; the oracle restates
     pairs + a recursive transitive closure. Cluster rows are
     component-sized — tiny next to the image corpus."""
@@ -11125,12 +11128,12 @@ def sim_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ε) plus 8 neighbors, candidates meet on an equi-join, the exact
     integer distance² filter runs only inside cells, so cost is
     Σ|cell|² not N². Core points (≥ minPts neighbors) cluster via the
-    same large-star/small-star CC as `dedup_cluster_cc` (O(log n)
-    rounds); border points take the MINIMUM neighboring core
-    component (classic DBSCAN is scan-order-dependent here — the min
-    rule makes the labeling deterministic and engine-comparable);
-    cluster ids are the component minimum. Coordinates are exact 1e-6
-    integers, every distance test exact."""
+    same connected components as `dedup_cluster_cc`; border points
+    take the MINIMUM neighboring core component (classic DBSCAN is
+    scan-order-dependent here — the min rule makes the labeling
+    deterministic and engine-comparable); cluster ids are the component
+    minimum. Coordinates are exact 1e-6 integers, every distance test
+    exact."""
     from pmc_conversion_spark.functions.graph import connected_components
     emb = tables.load(spark, sf_dir, "embeddings")
     eps = 20000

@@ -21,10 +21,16 @@ def scan_csv_delim(spark: SparkSession, path: str, *, sep: str = "\t",
     Reference: sources_config.json:465-480 — TSV default, ``","``
     override per file; quoted fields may contain the delimiter
     (study.csv:2); empty string fields are NULL.
+
+    With a schema and a header, the header must name the schema's
+    columns in order (Spark's ``enforceSchema=false``), so a file whose
+    columns come in another order fails inside the scan, with no extra
+    job, instead of being read under the wrong names.
     """
     reader = (spark.read.option("sep", sep).option("header", header)
               .option("quote", '"').option("escape", '"')
-              .option("nullValue", ""))
+              .option("nullValue", "")
+              .option("enforceSchema", False))
     if schema is not None:
         reader = reader.schema(schema)
     return reader.csv(path)

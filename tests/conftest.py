@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -13,6 +14,19 @@ def spark():
     from pmc_conversion_spark.session import get_spark
     s = get_spark("pytest", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
+
+
+def jobs_run_by(spark, fn):
+    """(Spark jobs ``fn()`` starts, counted through its job group,
+    ``fn()``'s result)."""
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
 
 
 @pytest.fixture()

@@ -6,9 +6,9 @@ and the jobs it runs are pinned with ``statusTracker``."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
+from conftest import jobs_run_by
 from pyspark.sql import functions as F
 
 from pmc_conversion_spark.operators.joins import codebook_decode
@@ -19,19 +19,6 @@ from pmc_conversion_spark.sources import sinks
 from pmc_conversion_spark.sources.codebook import codebook_maps
 from pmc_conversion_spark.sources.scans import scan_csv_delim
 from pmc_conversion_spark.util import local_df
-
-
-def jobs_run_by(spark, fn):
-    """(Spark jobs ``fn()`` starts, counted through its job group,
-    ``fn()``'s result)."""
-    sc = spark.sparkContext
-    group = f"pin-{uuid.uuid4().hex}"
-    try:
-        sc.setJobGroup(group, group)
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), result
 
 
 @pytest.fixture(scope="module")
@@ -205,20 +192,40 @@ def test_individual_write_runs_at_most_two_jobs(spark, dropzone, tmp_path):
     assert jobs <= 2
 
 
-def test_csr_round_trip(spark, dropzone, tmp_path):
-    """``read_csr`` reads the TSVs with a positional schema, so the merge
-    output must come back under the same names, types and rows."""
+def _write_csr(spark, dropzone, out):
+    """Merge the drop zone and write each entity as ``run_dag`` does;
+    returns the merged frames and the sources config path."""
     data_dir, config = dropzone
     frames, codebooks = RE.load_frames(spark, data_dir, config)
     csr = build_all(frames, config, codebooks)
     for name, df in csr.items():
         sinks.write_tsv(df.select([F.col(c).cast("string")
                                    for c in df.columns]),
-                        str(tmp_path / name), single_file=True)
-    config_path = os.path.join(os.path.dirname(data_dir), "config",
-                               "sources_config.json")
+                        str(out / name), single_file=True)
+    return csr, os.path.join(os.path.dirname(data_dir), "config",
+                             "sources_config.json")
+
+
+def test_csr_round_trip(spark, dropzone, tmp_path):
+    """``read_csr`` reads the TSVs with the config's schema, so the merge
+    output must come back under the same names, types and rows."""
+    csr, config_path = _write_csr(spark, dropzone, tmp_path)
     back = RE.read_csr(spark, str(tmp_path), config_path)
     assert sorted(back) == sorted(csr)
     for name, df in csr.items():
         assert back[name].dtypes == df.dtypes, name
         assert _rows(back[name]) == _rows(df), name
+
+
+def test_read_csr_rejects_reordered_header(spark, dropzone, tmp_path):
+    """A TSV with its columns in another order is well-formed, but a
+    positional read would load ``title`` as ``acronym``: it must fail."""
+    csr, config_path = _write_csr(spark, dropzone, tmp_path)
+    assert csr["Study"].columns == ["study_id", "acronym", "title",
+                                    "description"]
+    sinks.write_tsv(csr["Study"].select("study_id", "title", "acronym",
+                                        "description"),
+                    str(tmp_path / "Study"), single_file=True)
+    back = RE.read_csr(spark, str(tmp_path), config_path)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        back["Study"].collect()

@@ -6,9 +6,13 @@ chains, and the streaming twin of the interval join.
 
 from __future__ import annotations
 
+import random
+
 import pytest
+from conftest import jobs_run_by
 from pyspark.sql import functions as F
 
+from pmc_conversion_spark.functions import graph
 from pmc_conversion_spark.functions.graph import connected_components
 from pmc_conversion_spark.operators.temporal import (asof_join,
                                                      asof_nearest_join,
@@ -118,7 +122,15 @@ def test_interval_join_matches_batch_and_stream(spark, tmp_path,
     assert stream_got == got
 
 
-def test_cc_two_components_and_transitivity(spark, fixture_df):
+@pytest.fixture(params=["driver", "distributed"])
+def cc_path(request, monkeypatch):
+    """Run the test through each side of ``DRIVER_EDGES``."""
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "DRIVER_EDGES", 0)
+    return request.param
+
+
+def test_cc_two_components_and_transitivity(spark, fixture_df, cc_path):
     # 1-2, 2-3 transitively one cluster; 10-11 a second; 99 never appears
     edges = fixture_df([(2, 1), (3, 2), (10, 11)], "src long, dst long")
     cc = {r.node: r.component
@@ -127,9 +139,10 @@ def test_cc_two_components_and_transitivity(spark, fixture_df):
 
 
 @pytest.mark.slow
-def test_cc_converges_on_long_chain(spark, fixture_df):
+def test_cc_converges_on_long_chain(spark, fixture_df, monkeypatch):
     # a 40-node path is the adversarial case for label propagation
     # (diameter 39); alternating star must converge well inside max_iter
+    monkeypatch.setattr(graph, "DRIVER_EDGES", 0)
     edges = fixture_df([(i, i + 1) for i in range(40)],
                        "src long, dst long")
     cc = connected_components(edges, max_iter=12)
@@ -138,12 +151,40 @@ def test_cc_converges_on_long_chain(spark, fixture_df):
     assert cc.count() == 41
 
 
-def test_cc_self_loops_and_duplicate_edges_ignored(spark, fixture_df):
+def test_cc_self_loops_and_duplicate_edges_ignored(spark, fixture_df,
+                                                   cc_path):
     edges = fixture_df([(5, 5), (1, 2), (2, 1), (1, 2)],
                        "src long, dst long")
     cc = {r.node: r.component
           for r in connected_components(edges).collect()}
     assert cc == {1: 1, 2: 1}
+
+
+def test_cc_driver_and_distributed_agree(spark, fixture_df, monkeypatch):
+    # ~2,000 random edges over 3,000 ids (many components), a 200-node
+    # path, self-loops and duplicate edges
+    rng = random.Random(11)
+    rows = [(rng.randrange(3000), rng.randrange(3000)) for _ in range(2000)]
+    rows += [(10_000 + i, 10_000 + i + 1) for i in range(199)]
+    rows += [(i, i) for i in range(0, 3000, 97)] + rows[:50]
+    rng.shuffle(rows)
+    edges = fixture_df(rows, "src long, dst long")
+    driver = connected_components(edges)
+    monkeypatch.setattr(graph, "DRIVER_EDGES", 0)
+    distributed = connected_components(edges)
+    assert driver.schema == distributed.schema
+    rows = sorted(map(tuple, driver.collect()))
+    assert rows == sorted(map(tuple, distributed.collect()))
+    assert len({component for _, component in rows}) > 100
+
+
+def test_cc_below_bound_runs_checkpoint_and_collect_only(spark, fixture_df):
+    # the checkpoint, then the collect; the result is a local table, so
+    # reading it back runs no job at all (hence no shuffle)
+    edges = fixture_df([(2, 1), (3, 2), (10, 11)], "src long, dst long")
+    jobs, cc = jobs_run_by(spark, lambda: connected_components(edges))
+    assert jobs == 2
+    assert jobs_run_by(spark, cc.collect)[0] == 0
 
 
 def test_asof_rejects_nonintegral_tie_column(spark, fixture_df):
