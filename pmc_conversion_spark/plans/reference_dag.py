@@ -13,9 +13,9 @@ manifest fingerprints hashed on the driver drive the skip logic
 (DagRunner; files are streamed in chunks as scripts/checksum.py does, so
 memory stays bounded and Spark's 2 GiB binaryFile limit does not apply),
 sources2csr + csr2transmart are the real Spark compilers, git commits
-become SnapshotStore commits, the DB load is the atomic staging-swap
-sink (no Postgres in the sandbox — same all-or-nothing contract,
-README.md:181-183), and stage 5 drives an injectable
+become SnapshotStore commits, the DB load hard-links the staging tree
+and swaps it in (Postgres is out of scope — same all-or-nothing
+contract, README.md:181-183), and stage 5 drives an injectable
 TransmartPostLoadClient. Everything is dependency-injected, so tests
 and the registry entry run the WHOLE five-stage pipeline without a
 network or a database.
@@ -60,8 +60,7 @@ def build_reference_dag(spark: SparkSession, *, root: str,
     """Assemble the 8 tasks. ``api`` is a TransmartPostLoadClient (or
     None to skip stage 5's REST calls); ``fail_stage`` injects a fault
     into the named stage (test hook for the run.sh error path)."""
-    from pmc_conversion_spark.sources.sinks import (SnapshotStore,
-                                                    tx_swap_write)
+    from pmc_conversion_spark.sources.sinks import SnapshotStore, _swap_in
 
     input_data = os.path.join(root, "input_data")
     working = os.path.join(root, "working")
@@ -96,7 +95,7 @@ def build_reference_dag(spark: SparkSession, *, root: str,
         for name, df in csr.items():
             write_tsv(df.select([F.col(c).cast("string")
                                  for c in df.columns]),
-                      os.path.join(working, name), single_file=True)
+                      os.path.join(working, name))
         ctx.counts["individual_rows"] = individuals.get["rows"]
 
     def csr2transmart() -> None:
@@ -123,14 +122,15 @@ def build_reference_dag(spark: SparkSession, *, root: str,
 
     def transmart_loader() -> None:
         failpoint("transmart_loader")
-        # the transmart-copy contract: all-or-nothing swap into the
-        # live location (README.md:181-183); Postgres is out of scope
-        # in the sandbox, the atomicity contract is not
-        from pmc_conversion_spark.sources.scans import scan_csv_delim
-        obs, loaded = _counted(scan_csv_delim(spark, os.path.join(
-            staging, "i2b2demodata", "observation_fact.tsv")))
-        tx_swap_write(obs, live_db)
-        ctx.counts["loaded_obs"] = loaded.get["rows"]
+        # transmart-copy swaps in the whole staging dir, all-or-nothing
+        # (main.py:144-147, README.md:181-183): hard-link it, rename it
+        # live. No Spark job: the count is the staging commit's
+        tree = live_db + ".staging"
+        shutil.rmtree(tree, ignore_errors=True)
+        shutil.copytree(staging, tree, copy_function=os.link)
+        _swap_in(tree, live_db)
+        staged = SnapshotStore(os.path.join(root, "snap_staging"))
+        ctx.counts["loaded_obs"] = staged.versions()[-1]["n_rows"]
 
     def transmart_api() -> None:
         failpoint("transmart_api")

@@ -233,8 +233,8 @@ def build_staging(spark: SparkSession, csr: Mapping[str, DataFrame],
 
 
 def write_staging(tables: Mapping[str, DataFrame], out_dir: str) -> None:
-    """Write the transmart-copy staging directory (the stage-4 input
-    contract, main.py:144-147: ``--directory <transmart_staging_dir>``),
+    """Write the staging directory (the stage-4 input, main.py:144-147),
+    each table a part-file directory, not transmart-copy's one file;
     then release the patient dimension :func:`build_staging` persisted."""
     from pmc_conversion_spark.sources.sinks import write_tsv
     try:
@@ -242,6 +242,6 @@ def write_staging(tables: Mapping[str, DataFrame], out_dir: str) -> None:
             df = tables[key]
             write_tsv(df.select([F.col(c).cast("string")
                                  for c in df.columns]),
-                      os.path.join(out_dir, rel), single_file=True)
+                      os.path.join(out_dir, rel))
     finally:
         tables["patient_dimension"].unpersist()

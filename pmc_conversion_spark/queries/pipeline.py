@@ -259,11 +259,11 @@ def pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sync():
         df = scan_csv_delim(spark, drop, schema="k string, v int")
-        write_tsv(df, staged, single_file=True)
+        write_tsv(df, staged)
 
     def transform():
         df = scan_csv_delim(spark, staged, schema="k string, v int")
-        write_tsv(df.withColumn("v2", F.col("v") * 2), out, single_file=True)
+        write_tsv(df.withColumn("v2", F.col("v") * 2), out)
 
     signals = SignalStore(root)
     runner = DagRunner(spark, signals)

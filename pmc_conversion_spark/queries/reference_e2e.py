@@ -71,7 +71,7 @@ def pipeline_e2e_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, df in csr.items():
         out_dir = os.path.join(out_root, name)
         write_tsv(df.select([F.col(c).cast("string") for c in df.columns]),
-                  out_dir, single_file=True)
+                  out_dir)
         back = scan_csv_delim(spark, out_dir)
         tagged.append(back.select(F.lit(name).alias("entity")))
     u = tagged[0]

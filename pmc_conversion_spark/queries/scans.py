@@ -44,7 +44,7 @@ def scan_csv_delim(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources_config.json:465-480). Round-trips nation through CSV."""
     d = _scratch("scan_csv_delim")
     nation = tables.load(spark, sf_dir, "nation")
-    K.write_tsv(nation, d, sep=",", single_file=True)
+    K.write_tsv(nation, d, sep=",")
     return S.scan_csv_delim(spark, d, sep=",", schema=NATION_SCHEMA)
 
 
@@ -131,7 +131,7 @@ def sink_csr_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified by reading the written file back."""
     d = _scratch("sink_csr_tsv")
     nation = tables.load(spark, sf_dir, "nation")
-    K.write_tsv(nation, d, single_file=True)
+    K.write_tsv(nation, d)
     return S.scan_csv_delim(spark, d, sep="\t", schema=NATION_SCHEMA)
 
 
@@ -148,7 +148,7 @@ def sink_staging_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = tables.load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("patient_id"),
         F.col("c_mktsegment").alias("concept_cd"))
-    K.write_tsv(obs, d, single_file=False)
+    K.write_tsv(obs, d)
     back = S.scan_csv_delim(spark, d, schema="patient_id long, concept_cd string")
     return back.groupBy("concept_cd").agg(F.count(F.lit(1)).alias("n_obs"))
 
@@ -240,7 +240,7 @@ def source_streaming_dropzone(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _scratch("source_streaming_dropzone")
     drop, ckpt, out = (os.path.join(d, x) for x in ("drop", "ckpt", "out"))
     nation = tables.load(spark, sf_dir, "nation")
-    K.write_tsv(nation, drop, single_file=True)
+    K.write_tsv(nation, drop)
     stream = I.dropzone_stream(spark, drop, NATION_SCHEMA)
     I.run_available_now(stream, ckpt, out)
     return spark.read.schema(NATION_SCHEMA).parquet(out)
@@ -265,7 +265,7 @@ def stream_file_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema_tick = NATION_SCHEMA + ", tick int"
 
     def tick(batch: DataFrame, n: int) -> None:
-        K.write_tsv(batch, os.path.join(drop, f"batch{n}"), single_file=True)
+        K.write_tsv(batch, os.path.join(drop, f"batch{n}"))
         stream = I.dropzone_stream(
             spark, os.path.join(drop, "*"), NATION_SCHEMA)
         I.run_available_now(
@@ -284,7 +284,7 @@ def stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _scratch("stream_exactly_once")
     drop, ckpt, out = (os.path.join(d, x) for x in ("drop", "ckpt", "out"))
     nation = tables.load(spark, sf_dir, "nation")
-    K.write_tsv(nation, drop, single_file=True)
+    K.write_tsv(nation, drop)
     for _ in range(2):  # second tick: no new files -> no-op
         stream = I.dropzone_stream(spark, drop, NATION_SCHEMA)
         I.run_available_now(stream, ckpt, out)

@@ -18,24 +18,22 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_tsv(df: DataFrame, path: str, *, sep: str = "\t",
-              single_file: bool = False) -> None:
+def write_tsv(df: DataFrame, path: str, *, sep: str = "\t") -> None:
     """Overwrite-write a delimited text dir (one TSV per CSR entity /
     staging table, luigi-pipeline/main.py:109-126).
 
-    ``single_file=True`` coalesces to one part — only for bounded
-    entity tables at the final sink edge (SURVEY §4: ``coalesce(1)``
-    only at TSV-sink edges); large facts keep their partitioning.
+    A part-file directory that keeps ``df``'s partitioning (every
+    reader scans the directory); quotes in a value are doubled, RFC
+    4180, as ``scan_csv_delim`` reads them back.
     """
-    out = df.coalesce(1) if single_file else df
-    (out.write.mode("overwrite")
+    (df.write.mode("overwrite")
      .option("sep", sep).option("header", True)
+     .option("escape", '"')
      .option("emptyValue", "").option("nullValue", "")
      .csv(path))
 
 
-def tx_swap_write(df: DataFrame, live_dir: str, *, sep: str = "\t",
-                  single_file: bool = True) -> None:
+def tx_swap_write(df: DataFrame, live_dir: str, *, sep: str = "\t") -> None:
     """All-or-nothing publish: write to a staging dir, then atomically
     swap it into the live location; on failure the live data is
     untouched.
@@ -45,13 +43,13 @@ def tx_swap_write(df: DataFrame, live_dir: str, *, sep: str = "\t",
     :func:`jdbc_tx_load` for databases.
     """
     staging = live_dir.rstrip("/") + ".staging"
-    write_tsv(df, staging, sep=sep, single_file=single_file)
+    write_tsv(df, staging, sep=sep)
     _swap_in(staging, live_dir)
 
 
 def _swap_in(staging: str, live_dir: str) -> None:
-    """Commit point of both ``tx_swap_write`` flavours: two renames
-    publish the overwrite-written ``staging`` dir as ``live_dir``. If
+    """Commit point of both ``tx_swap_write`` flavours and the DAG loader:
+    two renames publish the complete ``staging`` dir as ``live_dir``. If
     the staging write failed we never get here and live survives."""
     backup = live_dir.rstrip("/") + ".backup"
     shutil.rmtree(backup, ignore_errors=True)
@@ -118,7 +116,7 @@ def jdbc_tx_load(df: DataFrame, url: str, table: str,
 def _row_hash(df: DataFrame) -> Column:
     """Per-row 60-bit hash: the row's string fields (null as empty)
     joined by ``\\x1f``, sha1'd, first 15 hex digits as a bigint."""
-    cols = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns]
+    cols = [F.ifnull(F.col(c).cast("string"), F.lit("")) for c in df.columns]
     line = F.concat_ws("\x1f", *cols)
     return (F.conv(F.substring(F.sha1(F.encode(line, "UTF-8")), 1, 15), 16, 10)
             .cast("bigint"))
@@ -223,7 +221,7 @@ class SnapshotStore:
         obs = Observation()
         try:
             write_tsv(df.observe(obs, *_digest_aggs(_row_hash(df))), tmp,
-                      sep=sep, single_file=True)
+                      sep=sep)
             digest, n_rows = _digest_of(obs.get)
             if vs and vs[-1]["digest"] == digest:
                 return vs[-1]  # clean: skip commit

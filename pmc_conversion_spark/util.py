@@ -59,8 +59,8 @@ def local_df(spark, rows, schema: str) -> DataFrame:
     sequential Python-runner round each — measured ~5 s PER ACTION for
     a 1-row frame on local[32] (the transmart staging writes). The
     pandas/Arrow route ships one Arrow batch to the JVM and plans as a
-    single-partition ``LocalTableScan``: no Python workers, coalesce
-    is free. Rows may be tuples or dicts; values must be
+    ``LocalTableScan`` of ``min(rows, defaultParallelism)`` partitions:
+    no Python workers. Rows may be tuples or dicts; values must be
     Arrow-convertible (the case for every fixture here).
     """
     import pandas as pd

@@ -4,10 +4,14 @@ transmart_loader resource declaration."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import pytest
 
 from pmc_conversion_spark.plans.email_report import EmailConfig
-from pmc_conversion_spark.plans.incremental import PipelineExit
+from pmc_conversion_spark.plans.incremental import (DagRunner, PipelineExit,
+                                                    SignalStore, dir_manifest)
 from pmc_conversion_spark.plans.reference_dag import (build_reference_dag,
                                                       run_reference_pipeline)
 
@@ -64,3 +68,66 @@ def test_loader_declares_transmart_loader_resource(spark, tmp_path):
     assert by_name["transmart_loader"].resources == {"transmart_loader": 1}
     assert all(t.resources == {} for n, t in by_name.items()
                if n != "transmart_loader")
+
+
+def _run_generated(spark, root, gen, dropzone, group, fail_stage=None):
+    """One DAG run over a generated drop zone, bound as
+    ``perfbench.dag.run_dag`` binds it; each task's Spark jobs run in
+    the job group ``<group>-<task>``."""
+    from perfbench import dag, spans
+    from pmc_conversion_spark.plans import reference_dag as RD
+    sc = spark.sparkContext
+
+    def in_group(name, run):
+        def call():
+            sc.setJobGroup(f"{group}-{name}", name)
+            try:
+                run()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        return call
+
+    with dag.bound(spans.NullTracer(), sources_config=gen["sources_config"],
+                   ontology_config=gen["ontology_config"]):
+        tasks, ctx = RD.build_reference_dag(spark, root=root,
+                                            dropzone=dropzone,
+                                            fail_stage=fail_stage)
+        for t in tasks:
+            t.run = in_group(t.name, t.run)
+        runner = DagRunner(spark, SignalStore(os.path.join(root, "signals")),
+                           resources={"transmart_loader": 1})
+        return runner.run_pipeline(tasks), ctx
+
+
+def test_loader_resume_on_generated_dropzone(spark, tmp_path):
+    """The loader fails, then a resume skips every upstream node and
+    publishes the staging tree without a Spark job; ``loaded_obs``
+    comes from the staging commit, which the resume skips."""
+    from perfbench import clinical
+    gen = clinical.generate(str(tmp_path / "gen"), seed=11, patients=20)
+    dropzone = str(tmp_path / "gen" / "A")
+    root = str(tmp_path / "run")
+    with pytest.raises(PipelineExit) as ei:
+        _run_generated(spark, root, gen, dropzone, uuid.uuid4().hex,
+                       fail_stage="transmart_loader")
+    st = dict(ei.value.statuses)
+    assert st["git_commit_staging"] == "ran"
+    assert st["transmart_loader"] == "failed"
+    assert not os.path.exists(os.path.join(root, "db_live"))
+
+    group = uuid.uuid4().hex
+    statuses, ctx = _run_generated(spark, root, gen, dropzone, group)
+    st2 = dict(statuses)
+    upstream = ("update_data_files", "git_commit_input", "sources2csr",
+                "csr2transmart", "git_commit_staging")
+    assert {st2[n] for n in upstream} == {"skipped"}
+    assert {st2[n] for n in ("transmart_loader", "transmart_api",
+                             "git_commit_load_logs")} == {"ran"}
+    assert (ctx.counts["loaded_obs"]
+            == gen["variants"]["A"]["observation_rows"])
+    tracker = spark.sparkContext.statusTracker()
+    assert tracker.getJobIdsForGroup(f"{group}-transmart_loader") == []
+    assert tracker.getJobIdsForGroup(f"{group}-git_commit_load_logs")
+    staging = dir_manifest(os.path.join(root, "staging"))
+    assert len({rel.split(os.sep)[1] for rel, _ in staging}) == 7
+    assert dir_manifest(os.path.join(root, "db_live")) == staging

@@ -87,6 +87,18 @@ def test_commit_of_file_scan_runs_one_job(spark, tmp_path):
     assert jobs_run_by(spark, lambda: store.commit(df))[0] == 1  # clean
 
 
+def test_write_tsv_reads_back_as_written(spark, tmp_path, fixture_df):
+    """Quotes inside a value are doubled on write, the escape
+    ``scan_csv_delim`` reads with, so each value comes back unchanged."""
+    values = ['has "quote" inside', 'a\\"b', "tab\tand, comma", "plain",
+              None]
+    df = fixture_df(list(enumerate(values)), "k int, v string")
+    sinks.write_tsv(df, str(tmp_path / "t"))
+    back = scan_csv_delim(spark, str(tmp_path / "t"),
+                          schema="k int, v string")
+    assert dict(back.collect()) == dict(enumerate(values))
+
+
 # -------------------------------------------------------- codebook map
 
 #: coded column g, int column n coded through its string form, and h
@@ -188,7 +200,7 @@ def test_individual_write_runs_at_most_two_jobs(spark, dropzone, tmp_path):
     df = _individual(spark, dropzone)
     as_text = df.select([F.col(c).cast("string") for c in df.columns])
     jobs, _ = jobs_run_by(spark, lambda: sinks.write_tsv(
-        as_text, str(tmp_path / "Individual"), single_file=True))
+        as_text, str(tmp_path / "Individual")))
     assert jobs <= 2
 
 
@@ -201,7 +213,7 @@ def _write_csr(spark, dropzone, out):
     for name, df in csr.items():
         sinks.write_tsv(df.select([F.col(c).cast("string")
                                    for c in df.columns]),
-                        str(out / name), single_file=True)
+                        str(out / name))
     return csr, os.path.join(os.path.dirname(data_dir), "config",
                              "sources_config.json")
 
@@ -225,7 +237,7 @@ def test_read_csr_rejects_reordered_header(spark, dropzone, tmp_path):
                                     "description"]
     sinks.write_tsv(csr["Study"].select("study_id", "title", "acronym",
                                         "description"),
-                    str(tmp_path / "Study"), single_file=True)
+                    str(tmp_path / "Study"))
     back = RE.read_csr(spark, str(tmp_path), config_path)
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         back["Study"].collect()

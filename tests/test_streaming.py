@@ -19,7 +19,7 @@ def test_dropzone_two_ticks_exactly_once(spark, tmp_path, fixture_df):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
     batch1 = fixture_df([("PAT1", "1"), ("PAT2", "2")], "id string, v string")
-    write_tsv(batch1, drop + "/b1", single_file=True)
+    write_tsv(batch1, drop + "/b1")
 
     stream = I.dropzone_stream(spark, drop + "/*", "id string, v string")
     I.run_available_now(stream, ckpt, out)
@@ -32,7 +32,7 @@ def test_dropzone_two_ticks_exactly_once(spark, tmp_path, fixture_df):
 
     # tick 3 with one new file: only the new rows are appended
     batch2 = fixture_df([("PAT3", "3")], "id string, v string")
-    write_tsv(batch2, drop + "/b2", single_file=True)
+    write_tsv(batch2, drop + "/b2")
     stream = I.dropzone_stream(spark, drop + "/*", "id string, v string")
     I.run_available_now(stream, ckpt, out)
     back = spark.read.schema("id string, v string").parquet(out)
