@@ -137,15 +137,30 @@ def dir_manifest(path: str) -> list[tuple[str, str]]:
     return sorted(out)
 
 
-def dir_fingerprint(spark: SparkSession, path: str) -> str:
-    """SHA-1 of a directory's manifest digest: its ``"<path> <sha1>"``
-    lines sorted in UTF-8 byte order and joined by newlines, as
-    ``manifest_digest`` builds it (an empty or missing directory gives
-    the SHA-1 of the empty string). Runs on the driver; ``spark`` is
-    unused and kept for the callers' signature."""
-    lines = sorted(f"{rel} {sha1}".encode() for rel, sha1 in
-                   dir_manifest(path))
+def tree_digest(manifest: list[tuple[str, str]]) -> str:
+    """SHA-1 of a ``dir_manifest``: its ``"<path> <sha1>"`` lines sorted
+    in UTF-8 byte order and joined by newlines, as ``manifest_digest``
+    builds it (no files gives the SHA-1 of the empty string)."""
+    lines = sorted(f"{rel} {sha1}".encode() for rel, sha1 in manifest)
     return hashlib.sha1(b"\n".join(lines)).hexdigest()
+
+
+def dir_fingerprint(spark: SparkSession, path: str) -> str:
+    """``tree_digest`` of ``path`` on the driver; ``spark`` is unused."""
+    return tree_digest(dir_manifest(path))
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Write ``path`` so a reader sees the old file or the new one."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
 
 
 @dataclass
@@ -185,18 +200,7 @@ class SignalStore:
             return f.read().strip()
 
     def write(self, task: str, signal: str) -> None:
-        """Atomic: a reader sees the old signal or the new one, never a
-        partly written file."""
-        path = self._path(task)
-        tmp = path + ".tmp"
-        try:
-            with open(tmp, "w") as f:
-                f.write(signal)
-            os.replace(tmp, path)
-        except BaseException:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(tmp)
-            raise
+        write_atomic(self._path(task), signal)
 
     def remove(self, task: str | None = None) -> None:
         """Force re-run: drop one signal or all (remove_done_files.sh:3)."""

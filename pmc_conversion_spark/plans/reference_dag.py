@@ -13,7 +13,8 @@ manifest fingerprints hashed on the driver drive the skip logic
 (DagRunner; files are streamed in chunks as scripts/checksum.py does, so
 memory stays bounded and Spark's 2 GiB binaryFile limit does not apply),
 sources2csr + csr2transmart are the real Spark compilers, git commits
-become SnapshotStore commits, the DB load hard-links the staging tree
+become driver-side SnapshotStore tree commits, the DB load hard-links
+the staging tree
 and swaps it in (Postgres is out of scope — same all-or-nothing
 contract, README.md:181-183), and stage 5 drives an injectable
 TransmartPostLoadClient. Everything is dependency-injected, so tests
@@ -26,6 +27,7 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 from pmc_conversion_spark.plans import reference_e2e as RE
 from pmc_conversion_spark.plans import transmart as TM
 from pmc_conversion_spark.plans.incremental import (DagRunner, SignalStore,
-                                                    Task, dir_manifest)
+                                                    Task, write_atomic)
 from pmc_conversion_spark.plans.ontology import ontology_df
 
 
@@ -66,6 +68,8 @@ def build_reference_dag(spark: SparkSession, *, root: str,
     working = os.path.join(root, "working")
     staging = os.path.join(root, "staging")
     live_db = os.path.join(root, "db_live")
+    # csr2transmart's observation_fact count, which a resume may skip
+    staging_rows = Path(root, "staging.rows")
     ctx = DagContext()
 
     def failpoint(stage: str) -> None:
@@ -81,11 +85,8 @@ def build_reference_dag(spark: SparkSession, *, root: str,
 
     def git_commit_input() -> None:
         failpoint("git_commit_input")
-        from pmc_conversion_spark.util import local_df
         store = SnapshotStore(os.path.join(root, "snap_input"))
-        m = local_df(spark, dir_manifest(input_data),
-                     "path string, sha1 string")
-        ctx.counts["input_files"] = store.commit(m)["n_rows"]
+        ctx.counts["input_files"] = store.commit_tree(input_data)["n_rows"]
 
     def sources2csr() -> None:
         failpoint("sources2csr")
@@ -111,26 +112,23 @@ def build_reference_dag(spark: SparkSession, *, root: str,
             tabs["observation_fact"])
         TM.write_staging(tabs, staging)
         ctx.counts["observation_rows"] = observations.get["rows"]
+        write_atomic(str(staging_rows), str(observations.get["rows"]))
 
     def git_commit_staging() -> None:
         failpoint("git_commit_staging")
-        from pmc_conversion_spark.sources.scans import scan_csv_delim
-        store = SnapshotStore(os.path.join(root, "snap_staging"))
-        obs = scan_csv_delim(spark, os.path.join(
-            staging, "i2b2demodata", "observation_fact.tsv"))
-        ctx.counts["staged_obs"] = store.commit(obs)["n_rows"]
+        SnapshotStore(os.path.join(root, "snap_staging")).commit_tree(staging)
+        ctx.counts["staged_obs"] = int(staging_rows.read_text())
 
     def transmart_loader() -> None:
         failpoint("transmart_loader")
         # transmart-copy swaps in the whole staging dir, all-or-nothing
         # (main.py:144-147, README.md:181-183): hard-link it, rename it
-        # live. No Spark job: the count is the staging commit's
+        # live. No Spark job
         tree = live_db + ".staging"
         shutil.rmtree(tree, ignore_errors=True)
         shutil.copytree(staging, tree, copy_function=os.link)
         _swap_in(tree, live_db)
-        staged = SnapshotStore(os.path.join(root, "snap_staging"))
-        ctx.counts["loaded_obs"] = staged.versions()[-1]["n_rows"]
+        ctx.counts["loaded_obs"] = int(staging_rows.read_text())
 
     def transmart_api() -> None:
         failpoint("transmart_api")
@@ -140,12 +138,12 @@ def build_reference_dag(spark: SparkSession, *, root: str,
 
     def git_commit_load_logs() -> None:
         failpoint("git_commit_load_logs")
-        from pmc_conversion_spark.queries.manifest import fixture_df
-        store = SnapshotStore(os.path.join(root, "snap_logs"))
-        log = fixture_df(spark, [(k, int(v))
-                                 for k, v in sorted(ctx.counts.items())],
-                         "metric string, value long")
-        store.commit(log)
+        logs = os.path.join(root, "load_logs")
+        os.makedirs(logs, exist_ok=True)
+        lines = [f"{k}\t{int(v)}\n" for k, v in sorted(ctx.counts.items())]
+        write_atomic(os.path.join(logs, "counts.tsv"),
+                     "metric\tvalue\n" + "".join(lines))
+        SnapshotStore(os.path.join(root, "snap_logs")).commit_tree(logs)
 
     t1 = Task("update_data_files", [dropzone], update_data_files)
     t2 = Task("git_commit_input", [input_data], git_commit_input,

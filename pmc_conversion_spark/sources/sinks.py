@@ -167,7 +167,8 @@ class SnapshotStore:
     immutable ``v<N>/`` snapshot dirs and an append-only ``MANIFEST``
     log; commit-if-changed semantics via the snapshot digest, and
     rollback = re-point to an older version (GitVersionTask,
-    main.py:177-192).
+    main.py:177-192). A ``commit_tree`` version links a directory's
+    files to git-like blobs ``objects/<sha1>``, which ``vacuum`` keeps.
     """
 
     def __init__(self, root: str):
@@ -197,20 +198,48 @@ class SnapshotStore:
         """Write a new snapshot iff the content digest changed
         (commit-if-clean skip, main.py:76-82). Returns the log entry.
 
-        The digest is an order-insensitive content fingerprint
-        (main.py:66-68 semantics applied to content instead of files):
-        each row line is sha1-hashed, the per-row 60-bit hash prefixes
-        are combined with commutative aggregates (modular sum, bit_xor,
-        count — all map-side partial), and the combined triple is
-        sha1'd into the digest string — the same digest as
-        :func:`snapshot_digest`.
-
-        The aggregates ride on the snapshot write as an ``Observation``,
-        so a commit is one Spark job. The write goes to a hidden
-        ``.v<N>.tmp`` dir; a clean commit deletes it, a dirty one
-        renames it to ``v<N>`` and then appends the MANIFEST line, so a
-        ``v<N>`` dir only ever appears complete.
+        The digest is :func:`snapshot_digest`'s order-insensitive row
+        fingerprint (main.py:66-68 semantics applied to content instead
+        of files). Its aggregates ride on the snapshot write as an
+        ``Observation``, so a commit is one Spark job.
         """
+        obs = Observation()
+
+        def write(tmp: str) -> tuple[str, int]:
+            write_tsv(df.observe(obs, *_digest_aggs(_row_hash(df))), tmp,
+                      sep=sep)
+            return _digest_of(obs.get)
+        return self._publish(write)
+
+    def commit_tree(self, src: str) -> dict:
+        """Commit the files ``dir_manifest(src)`` lists, on the driver, iff
+        their digest (``dir_fingerprint(src)``) changed; ``n_rows`` is the
+        file count. A new file is copied into ``objects/``, not linked, so
+        an in-place rewrite of ``src`` cannot reach a version."""
+        from pmc_conversion_spark.plans import incremental as INC
+        manifest = INC.dir_manifest(src)
+        digest = INC.tree_digest(manifest)
+        if self.head_digest() == digest:
+            return self.versions()[-1]  # clean: write nothing
+        objects = os.path.join(self.root, "objects")
+        os.makedirs(objects, exist_ok=True)
+
+        def write(tmp: str) -> tuple[str, int]:
+            os.makedirs(tmp)
+            for rel, sha1 in manifest:
+                obj, dst = os.path.join(objects, sha1), os.path.join(tmp, rel)
+                if not os.path.exists(obj):
+                    shutil.copyfile(os.path.join(src, rel), obj + ".tmp")
+                    os.replace(obj + ".tmp", obj)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.link(obj, dst)
+            return digest, len(manifest)
+        return self._publish(write)
+
+    def _publish(self, write) -> dict:
+        """``write(tmp)`` fills ``.v<N>.tmp`` and returns (digest, n_rows);
+        if clean, the dir is deleted, else renamed to ``v<N>`` before the
+        MANIFEST append, so a ``v<N>`` only ever appears complete."""
         vs = self.versions()
         # max+1, not last+1: after a rollback the head entry points at
         # an OLD version number, but new snapshots must never reuse a
@@ -218,11 +247,9 @@ class SnapshotStore:
         version = (max(v["version"] for v in vs) + 1) if vs else 1
         tmp = os.path.join(self.root, f".v{version}.tmp")
         final = os.path.join(self.root, f"v{version}")
-        obs = Observation()
+        shutil.rmtree(tmp, ignore_errors=True)  # left by a killed commit
         try:
-            write_tsv(df.observe(obs, *_digest_aggs(_row_hash(df))), tmp,
-                      sep=sep)
-            digest, n_rows = _digest_of(obs.get)
+            digest, n_rows = write(tmp)
             if vs and vs[-1]["digest"] == digest:
                 return vs[-1]  # clean: skip commit
             # a v<N> outside MANIFEST is the orphan of a commit that

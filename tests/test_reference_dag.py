@@ -99,35 +99,43 @@ def _run_generated(spark, root, gen, dropzone, group, fail_stage=None):
         return runner.run_pipeline(tasks), ctx
 
 
-def test_loader_resume_on_generated_dropzone(spark, tmp_path):
-    """The loader fails, then a resume skips every upstream node and
-    publishes the staging tree without a Spark job; ``loaded_obs``
-    comes from the staging commit, which the resume skips."""
+@pytest.mark.parametrize("fail_stage", ["git_commit_staging",
+                                        "transmart_loader"])
+def test_loader_resume_on_generated_dropzone(spark, tmp_path, fail_stage):
+    """A node after csr2transmart fails, then a resume skips every node
+    before it and runs the rest. The commit nodes and the loader run no
+    Spark job; ``staged_obs`` and ``loaded_obs`` come from the count
+    csr2transmart persisted, which the resume skips."""
     from perfbench import clinical
+    from perfbench.dag import NODES
     gen = clinical.generate(str(tmp_path / "gen"), seed=11, patients=20)
     dropzone = str(tmp_path / "gen" / "A")
     root = str(tmp_path / "run")
+    first = uuid.uuid4().hex
     with pytest.raises(PipelineExit) as ei:
-        _run_generated(spark, root, gen, dropzone, uuid.uuid4().hex,
-                       fail_stage="transmart_loader")
+        _run_generated(spark, root, gen, dropzone, first,
+                       fail_stage=fail_stage)
     st = dict(ei.value.statuses)
-    assert st["git_commit_staging"] == "ran"
-    assert st["transmart_loader"] == "failed"
+    assert st["csr2transmart"] == "ran"
+    assert st[fail_stage] == "failed"
     assert not os.path.exists(os.path.join(root, "db_live"))
 
     group = uuid.uuid4().hex
     statuses, ctx = _run_generated(spark, root, gen, dropzone, group)
     st2 = dict(statuses)
-    upstream = ("update_data_files", "git_commit_input", "sources2csr",
-                "csr2transmart", "git_commit_staging")
-    assert {st2[n] for n in upstream} == {"skipped"}
-    assert {st2[n] for n in ("transmart_loader", "transmart_api",
-                             "git_commit_load_logs")} == {"ran"}
-    assert (ctx.counts["loaded_obs"]
-            == gen["variants"]["A"]["observation_rows"])
+    at = NODES.index(fail_stage)
+    assert {st2[n] for n in NODES[:at]} == {"skipped"}
+    assert {st2[n] for n in NODES[at:]} == {"ran"}
+    rows = gen["variants"]["A"]["observation_rows"]
+    # a skipped staging commit counts nothing
+    staged = rows if fail_stage == "git_commit_staging" else None
+    assert ({k: ctx.counts.get(k) for k in ("staged_obs", "loaded_obs")}
+            == {"staged_obs": staged, "loaded_obs": rows})
     tracker = spark.sparkContext.statusTracker()
-    assert tracker.getJobIdsForGroup(f"{group}-transmart_loader") == []
-    assert tracker.getJobIdsForGroup(f"{group}-git_commit_load_logs")
+    for g in (first, group):
+        for node in ("git_commit_input", "git_commit_staging",
+                     "transmart_loader", "git_commit_load_logs"):
+            assert tracker.getJobIdsForGroup(f"{g}-{node}") == []
     staging = dir_manifest(os.path.join(root, "staging"))
     assert len({rel.split(os.sep)[1] for rel, _ in staging}) == 7
     assert dir_manifest(os.path.join(root, "db_live")) == staging

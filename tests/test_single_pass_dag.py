@@ -1,6 +1,6 @@
 """Each DAG frame runs once: the snapshot digest rides on the snapshot
-write, codebooks decode from a driver-built map, and source headers are
-read on the driver. Each route is checked against the one it replaced,
+write, a directory commit runs on the driver, codebooks decode from a
+driver-built map, and source headers are read on the driver. Each route is checked against the one it replaced,
 and the jobs it runs are pinned with ``statusTracker``."""
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pmc_conversion_spark.operators.joins import codebook_decode
 from pmc_conversion_spark.plans import config_model as CM
 from pmc_conversion_spark.plans import reference_e2e as RE
+from pmc_conversion_spark.plans.incremental import dir_fingerprint, dir_manifest
 from pmc_conversion_spark.plans.sources2csr import build_all, project_source
 from pmc_conversion_spark.sources import sinks
 from pmc_conversion_spark.sources.codebook import codebook_maps
@@ -85,6 +86,88 @@ def test_commit_of_file_scan_runs_one_job(spark, tmp_path):
     store = sinks.SnapshotStore(str(tmp_path / "snap"))
     assert jobs_run_by(spark, lambda: store.commit(df))[0] == 1
     assert jobs_run_by(spark, lambda: store.commit(df))[0] == 1  # clean
+
+
+# ------------------------------------------------------ tree commit
+
+def _store_files(root) -> dict[str, bytes]:
+    """Every file under a store root, by relative path, with its bytes."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def test_tree_versions_check_out_as_committed(tmp_path):
+    """After the source moves on, each ``v<N>`` lists what the source
+    listed when it was committed; the head digest is the source's
+    fingerprint, and each commit adds only objects of new content."""
+    src, snap = tmp_path / "src", tmp_path / "snap"
+    (src / "t").mkdir(parents=True)
+    (src / "a.tsv").write_text("k\n1\n")
+    (src / "t" / "part-0.csv").write_text("x\n")
+    (src / "t" / "_SUCCESS").write_text("")
+    store = sinks.SnapshotStore(str(snap))
+    committed = []
+    for change in ({"a.tsv": "k\n2\n"},
+                   {"t/part-1.csv": "x\n", "b.tsv": "k\n1\n"}, {}):
+        entry = store.commit_tree(str(src))
+        committed.append(dir_manifest(str(src)))
+        assert entry["digest"] == dir_fingerprint(None, str(src))
+        assert entry["n_rows"] == len(committed[-1])
+        for rel, text in change.items():
+            (src / rel).write_text(text)
+    (src / "t" / "part-0.csv").unlink()
+    (src / "a.tsv").write_text("k\n3\n")
+    assert [v["version"] for v in store.versions()] == [1, 2, 3]
+    for v, manifest in zip((1, 2, 3), committed):
+        assert dir_manifest(str(snap / f"v{v}")) == manifest
+    blobs = {sha1 for m in committed for _, sha1 in m}
+    assert sorted(os.listdir(snap / "objects")) == sorted(blobs)
+
+
+def test_clean_tree_recommit_writes_nothing(tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.tsv").write_text("k\n1\n")
+    store = sinks.SnapshotStore(str(tmp_path / "snap"))
+    first = store.commit_tree(str(src))
+    before = _store_files(tmp_path / "snap")
+    assert store.commit_tree(str(src)) == first
+    assert _store_files(tmp_path / "snap") == before
+    assert len(store.versions()) == 1
+
+
+def test_in_place_rewrite_leaves_version_bytes(tmp_path):
+    """The source file's inode is rewritten, not replaced; a version
+    whose file shared that inode would change with it."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "counts.tsv").write_text("metric\tvalue\nrows\t200\n")
+    store = sinks.SnapshotStore(str(tmp_path / "snap"))
+    store.commit_tree(str(src))
+    with open(src / "counts.tsv", "w") as f:
+        f.write("metric\tvalue\nrows\t198\n")
+    assert ((tmp_path / "snap" / "v1" / "counts.tsv").read_text()
+            == "metric\tvalue\nrows\t200\n")
+
+
+def test_orphan_tree_version_is_replaced(tmp_path):
+    """A ``v<N>`` outside MANIFEST (a commit that died after its rename)
+    is replaced by the next commit."""
+    src, snap = tmp_path / "src", tmp_path / "snap"
+    src.mkdir()
+    (src / "a.tsv").write_text("k\n1\n")
+    store = sinks.SnapshotStore(str(snap))
+    store.commit_tree(str(src))
+    (snap / "v2").mkdir()
+    (snap / "v2" / "stale.tsv").write_text("k\n0\n")
+    (src / "a.tsv").write_text("k\n2\n")
+    assert store.commit_tree(str(src))["version"] == 2
+    assert dir_manifest(str(snap / "v2")) == dir_manifest(str(src))
 
 
 def test_write_tsv_reads_back_as_written(spark, tmp_path, fixture_df):
