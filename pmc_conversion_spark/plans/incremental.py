@@ -113,9 +113,10 @@ def _hidden(name: str) -> bool:
             or (name.startswith("_") and "=" not in name))
 
 
-def dir_manifest(path: str) -> list[tuple[str, str]]:
-    """(relative path, SHA-1 hex) of every file a Spark manifest scan
-    (``manifest_with_checksums``) of ``path`` would list, sorted by path.
+def listed_files(path: str) -> list[tuple[str, str]]:
+    """(relative path, full path) of every file a Spark manifest scan
+    (``manifest_with_checksums``) of the directory ``path`` would list,
+    sorted by relative path.
 
     Same file filter: hidden and ``._COPYING_`` names are skipped at
     every level, except directories named ``_metadata*`` /
@@ -131,10 +132,18 @@ def dir_manifest(path: str) -> list[tuple[str, str]]:
             if (_hidden(name) or name.endswith(".sha1")
                     or os.path.getsize(full) == 0):
                 continue
-            with open(full, "rb") as f:
-                sha1 = hashlib.file_digest(f, "sha1").hexdigest()
-            out.append((os.path.relpath(full, path), sha1))
+            out.append((os.path.relpath(full, path), full))
     return sorted(out)
+
+
+def dir_manifest(path: str) -> list[tuple[str, str]]:
+    """(relative path, SHA-1 hex) of every file ``listed_files(path)``
+    lists, sorted by path."""
+    out = []
+    for rel, full in listed_files(path):
+        with open(full, "rb") as f:
+            out.append((rel, hashlib.file_digest(f, "sha1").hexdigest()))
+    return out
 
 
 def tree_digest(manifest: list[tuple[str, str]]) -> str:

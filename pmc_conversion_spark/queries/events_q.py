@@ -24,6 +24,23 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tables.load(spark, sf_dir, "events")
 
 
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a file stream over ``sf_dir``, NTZ-tolerant as
+    ``tables.load`` is. The stream declares the file's raw schema
+    (``tables.file_schema``), not the loader's rebuilt one: under the
+    engine's legacy nanos conf the parquet source yields a nanos ``ts``
+    as a long, which is rebuilt on the stream as ``_load_events`` does
+    (ADVICE r2)."""
+    stream = (spark.readStream
+              .schema(tables.file_schema(spark, sf_dir, "events"))
+              .option("pathGlobFilter", "events.parquet")
+              .parquet(sf_dir))
+    if dict(stream.dtypes)["ts"] == "bigint":
+        stream = stream.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return stream
+
+
 @register(
     "stream_tumbling_window",
     oracle="""
@@ -214,26 +231,10 @@ def stream_custom_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from pyspark.sql import types as T
-
     from pmc_conversion_spark.streaming.stateful import sessionize_with_state
 
-    # Derive the stream schema from a RAW batch read of the same file
-    # (NOT tables.load, which already rebuilds nanos-long ts into a
-    # timestamp — declaring that rebuilt schema on the stream would
-    # mismatch the long the parquet source actually yields under the
-    # engine's legacy nanos conf and fail the read; ADVICE r2). On
-    # micros-NTZ data the raw schema is already a timestamp and the
-    # rebuild is a no-op branch; on legacy nanos data ts arrives long
-    # and is rebuilt on the STREAM, mirroring tables._load_events.
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = (spark.readStream.schema(raw.schema)
-              .option("pathGlobFilter", "events.parquet")  # dir source
-              .parquet(sf_dir))
-    if isinstance(stream.schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    sessions = sessionize_with_state(stream, gap_minutes=30)
+    sessions = sessionize_with_state(_events_stream(spark, sf_dir),
+                                     gap_minutes=30)
     name = f"sessions_{uuid.uuid4().hex[:8]}"
     q = (sessions.writeStream.format("memory").queryName(name)
          .outputMode("update")
@@ -272,58 +273,37 @@ if _protobuf_available():
         oracle pins. CONDITIONALLY registered: requires a working
         google.protobuf in the Python workers (see
         streaming/stateful.py running_count_tws)."""
-        import tempfile
-        import uuid
-
-        from pyspark.sql import types as T
-
         from pmc_conversion_spark.streaming.stateful import \
             running_count_tws
 
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        stream = (spark.readStream.schema(raw.schema)
-                  .option("pathGlobFilter", "events.parquet")
-                  .parquet(sf_dir))
-        if isinstance(stream.schema["ts"].dataType, T.LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")))
-        counts = running_count_tws(stream)
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        q = (counts.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="pmc_tws_ckpt_"))
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-        return (spark.table(name).groupBy("user_id")
+        return (_tws_run(spark, sf_dir, running_count_tws)
+                .groupBy("user_id")
                 .agg(F.max("n_events").alias("n_events")))
 
-    def _tws_run(spark: SparkSession, sf_dir: str, build) -> DataFrame:
+    def _tws_run(spark: SparkSession, sf_dir: str, build,
+                 mode: str = "update") -> DataFrame:
         """Shared harness for the transformWithState registry entries:
         events file stream (NTZ-tolerant ts) → build(stream) → memory
-        sink, availableNow, update mode → the sink table."""
+        sink, availableNow, ``mode`` output → the sink table. The
+        RocksDB provider that the operator sets is scoped to the run,
+        from the build through the query's end, so the session's
+        settings come back as they were."""
         import tempfile
         import uuid
 
-        from pyspark.sql import types as T
+        from pmc_conversion_spark.streaming.stateful import TWS_CONF
+        from pmc_conversion_spark.util import session_conf
 
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        stream = (spark.readStream.schema(raw.schema)
-                  .option("pathGlobFilter", "events.parquet")
-                  .parquet(sf_dir))
-        if isinstance(stream.schema["ts"].dataType, T.LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")))
-        out = build(stream)
         name = f"tws_{uuid.uuid4().hex[:8]}"
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="pmc_tws_ckpt_"))
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+        with session_conf(spark, TWS_CONF):
+            out = build(_events_stream(spark, sf_dir))
+            q = (out.writeStream.format("memory").queryName(name)
+                 .outputMode(mode)
+                 .option("checkpointLocation",
+                         tempfile.mkdtemp(prefix="pmc_tws_ckpt_"))
+                 .trigger(availableNow=True)
+                 .start())
+            q.awaitTermination()
         return spark.table(name)
 
     @register(
@@ -411,34 +391,15 @@ if _protobuf_available():
         exercising the one TWS surface (timers + EventTime mode) the
         Update-mode trio does not. Append mode, 0-second watermark on
         ts (cast to instant-typed TIMESTAMP — EventTime rejects NTZ)."""
-        import tempfile
-        import uuid
-
-        from pyspark.sql import types as T
-
         from pmc_conversion_spark.streaming.stateful import \
             flush_on_watermark_tws
 
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        stream = (spark.readStream.schema(raw.schema)
-                  .option("pathGlobFilter", "events.parquet")
-                  .parquet(sf_dir))
-        if isinstance(stream.schema["ts"].dataType, T.LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")))
-        stream = (stream
-                  .withColumn("ts", F.col("ts").cast("timestamp"))
-                  .withWatermark("ts", "0 seconds"))
-        flushed = flush_on_watermark_tws(stream)
-        name = f"twst_{uuid.uuid4().hex[:8]}"
-        q = (flushed.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="pmc_twst_ckpt_"))
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-        return spark.table(name)
+        return _tws_run(
+            spark, sf_dir,
+            lambda s: flush_on_watermark_tws(
+                s.withColumn("ts", F.col("ts").cast("timestamp"))
+                .withWatermark("ts", "0 seconds")),
+            mode="append")
 
 
 @register(
@@ -1931,16 +1892,8 @@ def stream_dedup_within_watermark(spark: SparkSession,
     import tempfile
     import uuid
 
-    from pyspark.sql import types as T
-
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = (spark.readStream.schema(raw.schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
-    if isinstance(stream.schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = (_events_stream(spark, sf_dir)
+              .withColumn("ts", F.col("ts").cast("timestamp")))
     deduped = (stream.withWatermark("ts", "2 hours")
                .dropDuplicatesWithinWatermark(["user_id", "event_type"]))
     name = f"ddww_{uuid.uuid4().hex[:8]}"
@@ -2251,17 +2204,9 @@ def stream_union_two_sources(spark: SparkSession,
     import tempfile
     import uuid
 
-    from pyspark.sql import types as T
-
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-
     def feed(types, label):
-        s = (spark.readStream.schema(raw.schema)
-             .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-        if isinstance(s.schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts",
-                             F.timestamp_micros(F.expr("ts div 1000")))
-        s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+        s = (_events_stream(spark, sf_dir)
+             .withColumn("ts", F.col("ts").cast("timestamp")))
         return (s.filter(F.col("event_type").isin(*types))
                 .withColumn("feed", F.lit(label)))
 
@@ -5336,35 +5281,18 @@ def _register_tws_initial_state() -> None:
         emitted totals equal the FULL batch per-user count — the
         oracle's HAVING guard pins the Update-mode contract that
         seed-only keys (no streamed rows) never emit."""
-        import tempfile
-        import uuid
-
-        from pyspark.sql import types as T
-
         from pmc_conversion_spark.streaming.stateful import \
             warm_start_count_tws
 
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        seed = (raw.filter(F.col("event_id") % 2 == 0)
+        seed = (_events(spark, sf_dir)
+                .filter(F.col("event_id") % 2 == 0)
                 .groupBy("user_id")
                 .agg(F.count(F.lit(1)).alias("n_seed")))
-        stream = (spark.readStream.schema(raw.schema)
-                  .option("pathGlobFilter", "events.parquet")
-                  .parquet(sf_dir))
-        if isinstance(stream.schema["ts"].dataType, T.LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")))
-        stream = stream.filter(F.col("event_id") % 2 != 0)
-        counts = warm_start_count_tws(stream, seed)
-        name = f"twsi_{uuid.uuid4().hex[:8]}"
-        q = (counts.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="pmc_twsi_ckpt_"))
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-        return (spark.table(name).groupBy("user_id")
+        return (_tws_run(
+                    spark, sf_dir,
+                    lambda s: warm_start_count_tws(
+                        s.filter(F.col("event_id") % 2 != 0), seed))
+                .groupBy("user_id")
                 .agg(F.max("n_events").alias("n_events")))
 
 
@@ -8464,8 +8392,9 @@ def win_garman_klass_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid AS (SELECT CAST(range AS INT) AS c FROM range(1, 21)),
     ks AS (SELECT CAST(range AS INT) AS k FROM range(0, 21)),
     terms AS (
-      SELECT k, CAST(round(pow(a0.a, k) / factorial(k), 12)
-                     AS DECIMAL(38,12)) AS t
+      SELECT k, CASE WHEN a0.a < 20
+                     THEN CAST(round(pow(a0.a, k) / factorial(k), 12)
+                               AS DECIMAL(38,12)) END AS t
       FROM ks, a0),
     s AS (
       SELECT g.c,
@@ -8496,8 +8425,11 @@ def agg_erlang_c(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     λ is a ratio of exact counts; each aᵏ/k! term (k ≤ 20, exact
     factorial) is quantized to 12-dp DECIMAL before the grid sums, so
-    the c×k fan-out (a fixed 20×21 frame) is order-safe. One events
-    aggregate + constant-size grid math."""
+    the c×k fan-out (a fixed 20×21 frame) is order-safe. Where a ≥ 20,
+    the largest c, every row is saturated and the terms are unused, so
+    they stay NULL: at sf0.1 (a ≈ 556) the largest would be ~3e36,
+    past DECIMAL(38,12). One events aggregate + constant-size grid
+    math."""
     e = tables.load(spark, sf_dir, "events")
     lam = e.agg((F.count(F.lit(1))
                  / F.countDistinct(F.date_trunc("hour", F.col("ts")))
@@ -8510,9 +8442,10 @@ def agg_erlang_c(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      .alias("k"))
     terms = (ks.crossJoin(F.broadcast(a0))
              .select("k",
-                     F.round(F.pow(F.col("a"), F.col("k"))
-                             / F.factorial(F.col("k")), 12)
-                     .cast("decimal(38,12)").alias("t")))
+                     F.when(F.col("a") < 20,
+                            F.round(F.pow(F.col("a"), F.col("k"))
+                                    / F.factorial(F.col("k")), 12)
+                            .cast("decimal(38,12)")).alias("t")))
     s = (grid.crossJoin(terms)
          .groupBy("c")
          .agg(F.sum(F.when(F.col("k") < F.col("c"), F.col("t")))

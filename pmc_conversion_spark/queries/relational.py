@@ -651,31 +651,25 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .cast("double").alias("total_price")))
 
 
-def _skew_aqe_frame(spark: SparkSession, sf_dir: str):
-    """(frame, restore_confs): the skewed join built under lowered AQE
-    skew thresholds + disabled broadcast. Callers MUST execute the
-    frame and then call restore (the registry entry does both; the
-    plan test inspects the executed plan in between)."""
-    confs = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
-            "4KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2KB",
-        # the join output feeds a groupBy on the same key, so a skew
-        # split would invalidate the reusable partitioning and add a
-        # shuffle; force tells AQE the split is worth that trade (the
-        # exact call a 100 TB hot key forces in production)
-        "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
-    }
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
+#: Lowered AQE skew thresholds + disabled broadcast for
+#: ``_skew_aqe_frame``.
+_SKEW_AQE_CONF = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "4KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2KB",
+    # the join output feeds a groupBy on the same key, so a skew
+    # split would invalidate the reusable partitioning and add a
+    # shuffle; force tells AQE the split is worth that trade (the
+    # exact call a 100 TB hot key forces in production)
+    "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+}
 
-    def restore() -> None:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
+def _skew_aqe_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The skewed join. Callers build AND execute it inside
+    ``util.session_conf(spark, _SKEW_AQE_CONF)`` (the registry entry
+    does; the plan test inspects the executed plan there too)."""
     l = _t(spark, sf_dir, "lineitem")
     c = _t(spark, sf_dir, "customer")
     # A skewed reduce partition splits at MAP-output granularity. The
@@ -693,12 +687,11 @@ def _skew_aqe_frame(spark: SparkSession, sf_dir: str):
     d = (c.filter(F.col("c_custkey") <= 100)
          .select(F.col("c_custkey").alias("k")))
     # output boundary → double (exact; see join_bucketed_colocated)
-    out = (f.join(d, "k")
-           .groupBy("k")
-           .agg(F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-                .cast("double").alias("total_qty")))
-    return out, restore
+    return (f.join(d, "k")
+            .groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.sum(F.col("l_quantity").cast("decimal(18,2)"))
+                 .cast("double").alias("total_qty")))
 
 
 
@@ -728,12 +721,9 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized eagerly (localCheckpoint) so the lowered confs govern
     exactly this execution and are restored before returning —
     nothing leaks into the session's later queries."""
-    out, restore = _skew_aqe_frame(spark, sf_dir)
-    try:
-        out = out.localCheckpoint(eager=True)
-    finally:
-        restore()
-    return out
+    from pmc_conversion_spark.util import session_conf
+    with session_conf(spark, _SKEW_AQE_CONF):
+        return _skew_aqe_frame(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @register(

@@ -30,7 +30,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from pmc_conversion_spark.util import session_conf
 
 
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:
@@ -53,15 +55,11 @@ def overwrite_partitions_dynamic(df: DataFrame, path: str,
     incremental-publish primitive for partitioned tables. The conf is
     session-scoped, so set/restore it around the write.
     """
-    spark: SparkSession = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try:
+    with session_conf(df.sparkSession,
+                      {"spark.sql.sources.partitionOverwriteMode":
+                       "dynamic"}):
         (df.write.mode("overwrite").partitionBy(*partition_cols)
          .parquet(path))
-    finally:
-        spark.conf.set(key, old)
 
 
 def write_compacted(df: DataFrame, path: str, *,

@@ -218,10 +218,20 @@ def running_count_tws(events: DataFrame, *, key_col: str = "user_id"
                 timeMode="None"))
 
 
+#: The RocksDB state store provider that transformWithState requires.
+TWS_CONF = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+}
+
+
 def _tws_prepare(events: DataFrame) -> None:
     """Shared preamble for every transformWithState operator: protobuf
-    (shimmed if needed), worker delivery, and the RocksDB state store
-    provider that transformWithState requires."""
+    (shimmed if needed), worker delivery, and ``TWS_CONF`` on the
+    session. The setting stays set; a caller that must leave the
+    session as it found it runs the operator, from building it through
+    its query's end, inside ``util.session_conf(spark, TWS_CONF)``."""
     if not ensure_protobuf():
         raise NotImplementedError(
             "transformWithStateInPandas needs a working google.protobuf "
@@ -229,10 +239,8 @@ def _tws_prepare(events: DataFrame) -> None:
             "the bundled-runtime shim is available in this environment")
     spark = events.sparkSession
     _shim_workers(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
+    for k, v in TWS_CONF.items():
+        spark.conf.set(k, v)
 
 
 def topn_liststate_tws(events: DataFrame, *, n: int = 3,

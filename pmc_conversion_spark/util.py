@@ -1,10 +1,12 @@
 """Small shared utilities: process-private scratch dirs, unique names,
-driver-list frames, partition sizing and observed checkpoints. The
+driver-list frames, scoped session settings, partition sizing and
+observed checkpoints. The
 engine's Spark conf lives in :mod:`pmc_conversion_spark.session`."""
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import itertools
 import os
 import shutil
@@ -71,6 +73,23 @@ def local_df(spark, rows, schema: str) -> DataFrame:
         names = list(schema.fieldNames())
     pdf = pd.DataFrame(rows, columns=names)
     return spark.createDataFrame(pdf, schema)
+
+
+@contextlib.contextmanager
+def session_conf(spark, conf: dict[str, str]):
+    """Set ``conf`` on the session for the block, then put each key
+    back as it was: its old value, or unset if it was unset."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def target_partitions(df: DataFrame) -> int:

@@ -118,17 +118,17 @@ def test_aqe_splits_skewed_join_partition(spark):
     # 70% of fact rows on one key + lowered thresholds: AQE must mark
     # the SortMergeJoin skew=true (runtime split), and the confs must
     # be restored for the rest of the session
-    from pmc_conversion_spark.queries.relational import _skew_aqe_frame
+    from pmc_conversion_spark.queries.relational import (_SKEW_AQE_CONF,
+                                                         _skew_aqe_frame)
+    from pmc_conversion_spark.util import session_conf
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    out, restore = _skew_aqe_frame(spark, SF_DIR)
-    try:
+    with session_conf(spark, _SKEW_AQE_CONF):
+        out = _skew_aqe_frame(spark, SF_DIR)
         out.collect()
         plan = (out._jdf.queryExecution().executedPlan().toString()
                 .split("== Initial Plan ==")[0])
         assert "skew=true" in plan
         assert "SortMergeJoin" in plan
-    finally:
-        restore()
     assert spark.conf.get(
         "spark.sql.autoBroadcastJoinThreshold") == prev_bc
 

@@ -9,7 +9,7 @@ import os
 
 from pmc_conversion_spark.session import (ENGINE_CONF, apply_engine_conf,
                                           default_driver_memory)
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run_by
 
 
 def test_get_spark_session_carries_engine_conf(spark):
@@ -18,11 +18,19 @@ def test_get_spark_session_carries_engine_conf(spark):
 
 
 def test_registry_boundary_leaves_get_spark_conf_unchanged(spark):
+    """Includes two transformWithState queries, whose operators set the
+    RocksDB state store provider (the key starts unset, since an earlier
+    test may have left it set), and ``join_skew_aqe``, which lowers AQE
+    settings that are unset in a ``get_spark`` session."""
     import __spark_entry__ as E
+    from pmc_conversion_spark.streaming.stateful import TWS_CONF
     qs = E.queries()
+    for key in TWS_CONF:
+        spark.conf.unset(key)
     before = dict(spark.conf.getAll)
     for name in ("join_fk_transitive", "f_jaro_winkler",
-                 "pipeline_sources2csr"):
+                 "pipeline_sources2csr", "stream_running_count_tws",
+                 "stream_topn_liststate_tws", "join_skew_aqe"):
         qs[name](spark, SF_DIR)
     assert dict(spark.conf.getAll) == before
 
@@ -63,6 +71,11 @@ def test_events_loader_reads_timestamp_nanos(spark, tmp_path):
     got = (df.select("event_id", F.unix_micros("ts").alias("us"))
            .orderBy("event_id").collect())
     assert [r.us for r in got] == [n // 1000 for n in ns]
+    # the second load reuses the inferred schema: no job
+    jobs, again = jobs_run_by(
+        spark, lambda: tables.load(spark, str(tmp_path), "events"))
+    assert jobs == 0
+    assert again.dtypes == df.dtypes
 
 
 def test_default_driver_memory_fits_the_host():
