@@ -26,6 +26,11 @@ residual_segment_drift and that query's sigma.
 
 $SPARK_GRAFT_BENCH_QUERIES (comma-separated) restricts the run to a
 subset of HEADLINE, for pinned-replay comparisons and smoke runs.
+
+A headline query that raises is not timed: it is named on stderr, its
+``"Type: message"`` goes under ``errors`` in the detail file, the
+driver line lists its name under ``errors`` and counts it out of
+``n_queries``, and the other queries still run.
 """
 
 from __future__ import annotations
@@ -320,11 +325,18 @@ def main() -> None:
     checkpoints = []        # (query_index_reached, probes, factor)
     p0, f0 = checkpoint()
     checkpoints.append((0, p0, f0))
+    errors: dict[str, str] = {}
     for i, name in enumerate(names):
-        raw = time_query(name, REPEATS)
-        timings[name] = round(min(raw), 3)
-        medians[name] = round(_median(raw), 3)
-        sigmas[name] = round(_stdev(raw), 3)
+        try:
+            raw = time_query(name, REPEATS)
+        except Exception as e:
+            first = (str(e).strip().splitlines() or [""])[0]
+            errors[name] = f"{type(e).__name__}: {first}"
+            print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
+        else:
+            timings[name] = round(min(raw), 3)
+            medians[name] = round(_median(raw), 3)
+            sigmas[name] = round(_stdev(raw), 3)
         if (i + 1) % CAL_EVERY == 0 and (i + 1) < len(names):
             pc, fc = checkpoint()
             checkpoints.append((i + 1, pc, fc))
@@ -363,7 +375,8 @@ def main() -> None:
     # median relative sigma: the typical per-query repeat noise, the
     # error bar any cross-round per-query comparison must clear
     rel_sig = round(_median(
-        [sigmas[k] / max(1e-9, medians[k]) for k in timings]), 3)
+        [sigmas[k] / max(1e-9, medians[k]) for k in timings]), 3) \
+        if timings else 0.0
     detail = {
         "metric": "headline_total_sec",
         "value": total,
@@ -371,6 +384,7 @@ def main() -> None:
         "queries": timings,
         "queries_median": medians,
         "queries_sigma": sigmas,
+        "errors": errors,
         "sf": float(sf),
         "normalization": {
             "reference_epoch": "BENCH_r05.json driver session "
@@ -422,6 +436,7 @@ def main() -> None:
         "n_cal_checkpoints": len(checkpoints),
         "sf": float(sf),
         "n_queries": len(timings),
+        "errors": sorted(errors),
         "detail": os.path.basename(DETAIL_PATH),
     }))
 

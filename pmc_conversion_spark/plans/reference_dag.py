@@ -12,7 +12,9 @@ This module assembles the same chain from the engine's pieces:
 manifest fingerprints hashed on the driver drive the skip logic
 (DagRunner; files are streamed in chunks as scripts/checksum.py does, so
 memory stays bounded and Spark's 2 GiB binaryFile limit does not apply),
-sources2csr + csr2transmart are the real Spark compilers, git commits
+sources2csr + csr2transmart are the real Spark compilers (each writes
+its independent tables concurrently, ``sinks.write_tsv_all``, so a
+cold JVM plans one table while another's tasks run), git commits
 become driver-side SnapshotStore tree commits, the DB load hard-links
 the staging tree
 and swaps it in (Postgres is out of scope — same all-or-nothing
@@ -90,13 +92,13 @@ def build_reference_dag(spark: SparkSession, *, root: str,
 
     def sources2csr() -> None:
         failpoint("sources2csr")
-        from pmc_conversion_spark.sources.sinks import write_tsv
+        from pmc_conversion_spark.sources.sinks import write_tsv_all
         csr = RE.build_csr(spark, data_dir=input_data)
         csr["Individual"], individuals = _counted(csr["Individual"])
-        for name, df in csr.items():
-            write_tsv(df.select([F.col(c).cast("string")
-                                 for c in df.columns]),
-                      os.path.join(working, name))
+        write_tsv_all({os.path.join(working, name):
+                       df.select([F.col(c).cast("string")
+                                  for c in df.columns])
+                       for name, df in csr.items()})
         ctx.counts["individual_rows"] = individuals.get["rows"]
 
     def csr2transmart() -> None:

@@ -210,6 +210,10 @@ STAGING_LAYOUT = {
     "i2b2metadata/i2b2_secure.tsv": "i2b2_secure",
 }
 
+#: the tables built on the persisted ``patient_dimension``, written
+#: once it is filled
+_PATIENT_READERS = {"patient_mapping", "observation_fact"}
+
 
 def build_staging(spark: SparkSession, csr: Mapping[str, DataFrame],
                   ontology: DataFrame, study_id: str,
@@ -235,13 +239,26 @@ def build_staging(spark: SparkSession, csr: Mapping[str, DataFrame],
 def write_staging(tables: Mapping[str, DataFrame], out_dir: str) -> None:
     """Write the staging directory (the stage-4 input, main.py:144-147),
     each table a part-file directory, not transmart-copy's one file;
-    then release the patient dimension :func:`build_staging` persisted."""
-    from pmc_conversion_spark.sources.sinks import write_tsv
+    then release the patient dimension :func:`build_staging` persisted.
+
+    The tables are independent, so they are written concurrently
+    (:func:`~pmc_conversion_spark.sources.sinks.write_tsv_all`), in two
+    waves. The first writes ``patient_dimension``, which fills the
+    persisted frame, beside the four tables that do not read it. The
+    second writes ``patient_mapping`` and ``observation_fact`` from the
+    filled cache: written beside ``patient_dimension``, each would
+    compute the patients again.
+    """
+    from pmc_conversion_spark.sources.sinks import write_tsv_all
+
+    def wave(patient_readers: bool) -> dict[str, DataFrame]:
+        return {os.path.join(out_dir, rel): tables[key].select(
+                    [F.col(c).cast("string") for c in tables[key].columns])
+                for rel, key in STAGING_LAYOUT.items()
+                if (key in _PATIENT_READERS) == patient_readers}
+
     try:
-        for rel, key in STAGING_LAYOUT.items():
-            df = tables[key]
-            write_tsv(df.select([F.col(c).cast("string")
-                                 for c in df.columns]),
-                      os.path.join(out_dir, rel))
+        write_tsv_all(wave(False))
+        write_tsv_all(wave(True))
     finally:
         tables["patient_dimension"].unpersist()

@@ -13,7 +13,10 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+from collections.abc import Mapping
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +34,27 @@ def write_tsv(df: DataFrame, path: str, *, sep: str = "\t") -> None:
      .option("escape", '"')
      .option("emptyValue", "").option("nullValue", "")
      .csv(path))
+
+
+def write_tsv_all(frames: Mapping[str, DataFrame]) -> None:
+    """:func:`write_tsv` each ``{path: df}``, every write on its own
+    thread, for tables that do not depend on each other.
+
+    One write's planning overlaps another's tasks, and small jobs share
+    the task slots instead of queueing one after another. Each thread
+    starts with the caller's Spark local properties (job group and the
+    rest), so its jobs count where the caller's would. Waits for every
+    write, then raises the first failure in ``frames`` order. A frame
+    persisted for several of the tables should be filled before it
+    shares a call with them, or each reader computes it.
+    """
+    spark = next(iter(frames.values())).sparkSession
+    with ThreadPoolExecutor(max_workers=len(frames)) as ex:
+        futures = [ex.submit(inheritable_thread_target(spark)(write_tsv),
+                             df, path)
+                   for path, df in frames.items()]
+    for f in futures:
+        f.result()
 
 
 def tx_swap_write(df: DataFrame, live_dir: str, *, sep: str = "\t") -> None:

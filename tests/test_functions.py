@@ -23,6 +23,13 @@ def test_date_formats(spark, fixture_df):
     cases = [
         ("15AUG2000", "ddMMMyyyy", datetime.date(2000, 8, 15)),
         ("01jan1999", "ddMMMyyyy", datetime.date(1999, 1, 1)),
+        # the month token folds ASCII case only, as DuckDB's %b does:
+        # a long s (U+017F) upper-cases to S but matches no month
+        ("15aug2000", "ddMMMyyyy", datetime.date(2000, 8, 15)),
+        ("15Aug2000", "ddMMMyyyy", datetime.date(2000, 8, 15)),
+        ("15aUG2000", "ddMMMyyyy", datetime.date(2000, 8, 15)),
+        ("15XyZ2000", "ddMMMyyyy", None),
+        ("15\u017fep2000", "ddMMMyyyy", None),
         ("31XXX2020", "ddMMMyyyy", None),
         ("30FEB2020", "ddMMMyyyy", None),   # impossible date -> NULL
         ("", "ddMMMyyyy", None),

@@ -1,6 +1,7 @@
 """Full reference DAG: failure path (run.sh email + retcode), resume
-after failure (upstream skipped, failed stage re-run), and the
-transmart_loader resource declaration."""
+after failure (upstream skipped, failed stage re-run), the
+transmart_loader resource declaration, and the concurrent table writes
+of sources2csr and csr2transmart."""
 
 from __future__ import annotations
 
@@ -139,3 +140,95 @@ def test_loader_resume_on_generated_dropzone(spark, tmp_path, fail_stage):
     staging = dir_manifest(os.path.join(root, "staging"))
     assert len({rel.split(os.sep)[1] for rel, _ in staging}) == 7
     assert dir_manifest(os.path.join(root, "db_live")) == staging
+
+
+@pytest.fixture(scope="module")
+def generated(tmp_path_factory):
+    """A 20-patient generated drop zone: (generator result, variant A)."""
+    from perfbench import clinical
+    base = tmp_path_factory.mktemp("gen")
+    return (clinical.generate(str(base), seed=11, patients=20),
+            str(base / "A"))
+
+
+#: Spark expressions that build ICU's case-mapping tables on first use
+CASE_MAPPING = ("upper(", "lower(", "initcap(", "ilike(")
+
+
+def test_dag_write_frames_do_no_case_mapping(spark, generated, tmp_path,
+                                             monkeypatch):
+    """No CSR or staging frame the DAG writes case-maps a string: the
+    first ``upper``/``lower`` in a JVM spends 1.2-1.9 s building ICU's
+    tables, and every cron tick is a new JVM."""
+    from pmc_conversion_spark.sources import sinks
+    real, plans = sinks.write_tsv, {}
+
+    def write(df, path, **kw):
+        plans[path] = df._jdf.queryExecution().optimizedPlan().toString()
+        real(df, path, **kw)
+
+    monkeypatch.setattr(sinks, "write_tsv", write)
+    gen, dropzone = generated
+    _run_generated(spark, str(tmp_path / "run"), gen, dropzone,
+                   uuid.uuid4().hex)
+    assert len(plans) == 5 + 7
+    assert {p: [f for f in CASE_MAPPING if f in plan]
+            for p, plan in plans.items()} == {p: [] for p in plans}
+
+
+def test_concurrent_writes_keep_node_job_counts(spark, generated, tmp_path):
+    """The writes of a node run on pool threads in the node's job group,
+    and run the jobs they ran one after another."""
+    gen, dropzone = generated
+    group = uuid.uuid4().hex
+    _run_generated(spark, str(tmp_path / "run"), gen, dropzone, group)
+    tracker = spark.sparkContext.statusTracker()
+    assert {n: len(tracker.getJobIdsForGroup(f"{group}-{n}"))
+            for n in ("sources2csr", "csr2transmart")} == {
+        "sources2csr": 8, "csr2transmart": 16}
+
+
+@pytest.mark.parametrize("node, table", [
+    ("sources2csr", "Diagnosis"),
+    ("csr2transmart", "concept_dimension.tsv")])
+def test_failed_write_fails_node_after_the_others(spark, generated,
+                                                  tmp_path, monkeypatch,
+                                                  node, table):
+    """One table's write raises on its pool thread: the node fails once
+    the node's other writes have finished, writes no done-signal and
+    releases what it persisted; a resume runs the node again."""
+    from perfbench.dag import NODES
+    from pmc_conversion_spark.sources import sinks
+    real, written = sinks.write_tsv, []
+
+    def write(df, path, **kw):
+        if os.path.basename(path) == table:
+            raise RuntimeError(f"injected write failure: {table}")
+        real(df, path, **kw)
+        written.append(path)
+
+    gen, dropzone = generated
+    root = str(tmp_path / "run")
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(sinks, "write_tsv", write)
+    with pytest.raises(PipelineExit) as ei:
+        _run_generated(spark, root, gen, dropzone, uuid.uuid4().hex)
+    monkeypatch.undo()
+    assert dict(ei.value.statuses)[node] == "failed"
+    assert "injected write failure" in str(ei.value)
+    out = os.path.join(root, "working" if node == "sources2csr"
+                       else "staging")
+    # every other table of the node's first (or only) wave completed
+    mine = [p for p in written if p.startswith(out + os.sep)]
+    assert len(mine) == 4
+    assert all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in mine)
+    assert SignalStore(os.path.join(root, "signals")).read(node) is None
+    assert jsc.getPersistentRDDs().size() == persisted
+
+    statuses, _ = _run_generated(spark, root, gen, dropzone,
+                                 uuid.uuid4().hex)
+    st = dict(statuses)
+    at = NODES.index(node)
+    assert {st[n] for n in NODES[:at]} == {"skipped"}
+    assert {st[n] for n in NODES[at:]} == {"ran"}
