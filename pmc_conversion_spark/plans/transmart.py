@@ -20,17 +20,23 @@ Spark-first shape: every dimension is a bounded frame (patients,
 concepts, study) built once; the fact table is the EAV unpivot joined
 to the patient dimension on ``individual_id``. The patient join is an
 equi-join that AQE converts to broadcast when the dimension is small;
-the fact side never shuffles on anything but the join key. Surrogate
-``patient_num`` uses the two-phase range-bucketed row_number
+the fact side never shuffles on anything but the join key. The
+algorithm that numbers ``patient_num`` is picked by the size of the
+Individual input (:data:`DRIVER_PATIENT_BYTES`). At or below the bound
+the driver collects the ids in one job, sorts and numbers them, and
+the numbers join back as a local frame by broadcast: no window, no
+shuffle. Above it, the two-phase range-bucketed row_number
 (:func:`~pmc_conversion_spark.operators.windows.surrogate_key_distributed`)
-so no stage sorts the whole patient table in one partition.
+numbers them, so no stage sorts the whole patient table in one
+partition.
 
-The patient dimension is computed once per :func:`build_staging`: the
-frame is persisted, and ``patient_dimension``, ``patient_mapping`` and
-``observation_fact`` all read it; :func:`write_staging` releases it.
-A lost cached block is recomputed safely, since the bucket ids are a
-pure function of the key (no ``localCheckpoint``: see
-``operators/windows.py``).
+A locally numbered dimension is cheap to recompute, so each table that
+reads it recomputes it, and :func:`write_staging` writes all seven
+tables at once. A distributed one is persisted by :func:`build_staging`
+and filled before ``patient_mapping`` and ``observation_fact`` read it;
+:func:`write_staging` releases it. A lost cached block is recomputed
+safely, since the bucket ids are a pure function of the key (no
+``localCheckpoint``: see ``operators/windows.py``).
 
 i2b2 value-type conventions used (public i2b2 CDM): ``valtype_cd`` is
 ``N`` for numeric observations (``tval_char = 'E'`` meaning *equals*,
@@ -47,7 +53,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pmc_conversion_spark.operators.windows import surrogate_key_distributed
+from pmc_conversion_spark.operators.windows import (
+    _leaf_input_bytes, surrogate_key_distributed)
 from pmc_conversion_spark.plans.eav import unpivot_to_eav
 from pmc_conversion_spark.plans.ontology import SEP
 
@@ -88,12 +95,57 @@ def csr_observations(csr: Mapping[str, DataFrame]) -> DataFrame:
     return out
 
 
+#: Largest Individual input, in leaf bytes (Catalyst's size of the
+#: scanned files), whose ids are numbered on the driver: about 285k
+#: patients in ``perfbench.clinical``'s format (58.5 bytes each). Set by
+#: speed, well below what the driver can hold. csr2transmart's build and
+#: write, warm, local[4] on a 4-core host, driver against distributed:
+#: 12.0-13.3 s against 11.2-13.6 s at 3*10^5 patients (17.5 MB), and a
+#: 3.6 s build against 0.6 s at 10^6 (58.7 MB) with the writes level.
+#: The driver's peak RSS at 3*10^5 was 248 MB (its JVM's 3.1 GB).
+DRIVER_PATIENT_BYTES = 1 << 24
+
+
+def _numbered(individual: DataFrame) -> tuple[DataFrame, bool]:
+    """``individual`` with a dense ``patient_num`` in ``individual_id``
+    order, and whether the numbering ran distributed.
+
+    At or below :data:`DRIVER_PATIENT_BYTES` the ids are collected in
+    one job, as one Arrow column (``collect()`` of a million Rows takes
+    4-5 s, the Arrow path 1 s), and sorted in Spark's string order,
+    nulls first: Python compares ``str`` by code point, which is the
+    UTF-8 byte order Spark compares by. An unknown size, or a repeated
+    id (numbering rows, not ids, needs the window), takes the
+    distributed path."""
+    size = _leaf_input_bytes(individual, unknown=None)
+    if size is not None and size <= DRIVER_PATIENT_BYTES:
+        import pandas as pd
+        ids = individual.select("individual_id").toPandas()["individual_id"]
+        if ids.is_unique:
+            nulls = ids.isna()
+            ids = [None] * int(nulls.sum()) + sorted(ids[~nulls].tolist())
+            nums = individual.sparkSession.createDataFrame(
+                pd.DataFrame({"__id": ids,
+                              "patient_num": range(1, len(ids) + 1)}),
+                "__id string, patient_num int")
+            return (individual.join(F.broadcast(nums),
+                                    individual["individual_id"]
+                                    .eqNullSafe(nums["__id"]))
+                    .drop("__id"), False)
+    return surrogate_key_distributed(individual, "individual_id",
+                                     out_col="patient_num"), True
+
+
 def patient_dimension(individual: DataFrame) -> DataFrame:
     """i2b2 ``patient_dimension``: dense ``patient_num`` surrogate keys
-    ordered by ``individual_id`` (two-phase distributed row_number — no
-    single-partition sort), demographics from the Individual entity."""
-    pats = surrogate_key_distributed(individual, "individual_id",
-                                     out_col="patient_num")
+    ordered by ``individual_id`` (numbered on the driver at or below
+    :data:`DRIVER_PATIENT_BYTES`, by the two-phase distributed
+    row_number above it — never a single-partition sort), demographics
+    from the Individual entity."""
+    return _demographics(_numbered(individual)[0])
+
+
+def _demographics(pats: DataFrame) -> DataFrame:
     return pats.select(
         "patient_num",
         F.col("individual_id").alias("patient_ide"),
@@ -210,8 +262,8 @@ STAGING_LAYOUT = {
     "i2b2metadata/i2b2_secure.tsv": "i2b2_secure",
 }
 
-#: the tables built on the persisted ``patient_dimension``, written
-#: once it is filled
+#: the tables built on a persisted ``patient_dimension``, written once
+#: it is filled
 _PATIENT_READERS = {"patient_mapping", "observation_fact"}
 
 
@@ -219,11 +271,17 @@ def build_staging(spark: SparkSession, csr: Mapping[str, DataFrame],
                   ontology: DataFrame, study_id: str,
                   top_node: str) -> dict[str, DataFrame]:
     """Assemble every staging table (keys = :data:`STAGING_LAYOUT`
-    values). The ``patient_dimension`` frame is persisted, so the three
-    tables built on it share one computation; :func:`write_staging`
-    unpersists it, a caller that does not write must do so itself."""
+    values). At or below :data:`DRIVER_PATIENT_BYTES` this runs the one
+    job that collects the patient ids, and persists nothing. Above it
+    the distributed ``patient_dimension`` frame is persisted, so the
+    three tables built on it share one computation;
+    :func:`write_staging` unpersists it, a caller that does not write
+    must do so itself."""
     study = study_frame(spark, study_id)
-    pats = patient_dimension(csr["Individual"]).persist()
+    numbered, distributed = _numbered(csr["Individual"])
+    pats = _demographics(numbered)
+    if distributed:
+        pats = pats.persist()
     obs = csr_observations(csr)
     return {
         "study": study,
@@ -239,15 +297,18 @@ def build_staging(spark: SparkSession, csr: Mapping[str, DataFrame],
 def write_staging(tables: Mapping[str, DataFrame], out_dir: str) -> None:
     """Write the staging directory (the stage-4 input, main.py:144-147),
     each table a part-file directory, not transmart-copy's one file;
-    then release the patient dimension :func:`build_staging` persisted.
+    then release the patient dimension if :func:`build_staging`
+    persisted it.
 
     The tables are independent, so they are written concurrently
-    (:func:`~pmc_conversion_spark.sources.sinks.write_tsv_all`), in two
-    waves. The first writes ``patient_dimension``, which fills the
-    persisted frame, beside the four tables that do not read it. The
-    second writes ``patient_mapping`` and ``observation_fact`` from the
-    filled cache: written beside ``patient_dimension``, each would
-    compute the patients again.
+    (:func:`~pmc_conversion_spark.sources.sinks.write_tsv_all`). A
+    locally numbered patient dimension is recomputed by each reader,
+    so all seven go in one wave. A persisted one takes two: the first
+    writes ``patient_dimension``, which fills the cache, beside the
+    four tables that do not read it; the second writes
+    ``patient_mapping`` and ``observation_fact`` from the filled cache.
+    Written beside ``patient_dimension``, each would compute the
+    distributed numbering again.
     """
     from pmc_conversion_spark.sources.sinks import write_tsv_all
 
@@ -257,8 +318,12 @@ def write_staging(tables: Mapping[str, DataFrame], out_dir: str) -> None:
                 for rel, key in STAGING_LAYOUT.items()
                 if (key in _PATIENT_READERS) == patient_readers}
 
+    pats = tables["patient_dimension"]
+    if not pats.is_cached:
+        write_tsv_all({**wave(False), **wave(True)})
+        return
     try:
         write_tsv_all(wave(False))
         write_tsv_all(wave(True))
     finally:
-        tables["patient_dimension"].unpersist()
+        pats.unpersist()

@@ -599,8 +599,10 @@ def _csr_and_ontology(spark):
     """)
 def transmart_patient_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """i2b2 patient_dimension from the real dropzone: dense patient_num
-    surrogates (two-phase distributed row_number — no single-partition
-    sort) + demographics, vs the 17 hand-derived individuals."""
+    surrogates (numbered on the driver at or below
+    ``transmart.DRIVER_PATIENT_BYTES`` of input, by the two-phase
+    distributed row_number above it) + demographics, vs the 17
+    hand-derived individuals."""
     from pmc_conversion_spark.plans.transmart import patient_dimension
     return patient_dimension(RE.build_csr(spark)["Individual"])
 

@@ -8,7 +8,10 @@ does) and a warm pass (the same plans, compiled). Every node runs in
 both passes. Per node it prints the wall time and the jobs, stages and
 tasks its Spark jobs ran, counted through a ``statusTracker`` job group
 per node, with the tasks of each stage; a stage that ran one task is a
-funnel. Each pass's row counts are checked against the generator's.
+funnel. Each pass's row counts are checked against the generator's,
+and the peak resident memory of the driver's Python process and of its
+JVM so far (``ru_maxrss``, and ``VmHWM`` in ``/proc/<pid>/status``) is
+printed after it.
 
 Usage:
     python -u tools/dag_scale.py [--patients 1000 10000 100000] [--work DIR]
@@ -75,13 +78,31 @@ class NodeJobs:
                 "tasks": sum(tasks), "stage_tasks": tasks}
 
 
+def peak_rss_mb(spark) -> dict:
+    """Peak resident MB so far of this Python process and of the JVM."""
+    import resource
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/status") as f:
+        hwm = next(int(line.split()[1]) for line in f
+                   if line.startswith("VmHWM:"))
+    return {"py": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024,
+            "jvm": hwm // 1024}
+
+
 def run_size(patients: int, work: str) -> bool:
     """The cold and the warm pass at one size; True if both were
     correct."""
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
+
     from perfbench import clinical, dag
     from pmc_conversion_spark.session import get_spark
-    gen = clinical.generate(os.path.join(work, "gen"), seed=SEED,
-                            patients=patients)
+    # generated in a child, before the JVM starts, so that the Python
+    # peak RSS printed below is the pipeline's, not the generator's
+    with ProcessPoolExecutor(
+            1, mp_context=multiprocessing.get_context("spawn")) as ex:
+        gen = ex.submit(clinical.generate, os.path.join(work, "gen"),
+                        seed=SEED, patients=patients).result()
     expect = gen["variants"]["A"]
     want = {"individual_rows": expect["individual_rows"],
             "observation_rows": expect["observation_rows"],
@@ -103,9 +124,11 @@ def run_size(patients: int, work: str) -> bool:
         all_ok &= ok
         nodes = {n: dict(tracer.counters(n), wall_s=round(tracer.wall[n], 3))
                  for n in dag.NODES}
+        rss = peak_rss_mb(spark)
         print(f"\n{patients} patients, {name} pass: {wall:.2f} s, "
               f"{expect['observation_rows']} observations, "
-              f"{'correct' if ok else f'WRONG {statuses} {got} != {want}'}")
+              f"{'correct' if ok else f'WRONG {statuses} {got} != {want}'}, "
+              f"peak RSS MB python {rss['py']} JVM {rss['jvm']}")
         print(f"{'node':22s} {'wall_s':>8s} {'jobs':>5s} {'stages':>6s} "
               f"{'tasks':>6s}  tasks per stage")
         for n, c in nodes.items():
@@ -114,7 +137,7 @@ def run_size(patients: int, work: str) -> bool:
                   f"{','.join(map(str, c['stage_tasks']))}")
         print(json.dumps({"patients": patients, "pass": name,
                           "wall_s": round(wall, 3), "correct": ok,
-                          "nodes": nodes}))
+                          "peak_rss_mb": rss, "nodes": nodes}))
     spark.stop()
     return all_ok
 
